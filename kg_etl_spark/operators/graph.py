@@ -55,10 +55,16 @@ def priority_coalesced_coords(
     canonical_col: str = "canonical_id",
     source_col: str = "source",
     priority: tuple[str, ...] = ("yelp", "wikivoyage", "reddit"),
+    carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Canonical coords: per canonical place, avg(lat/lon) from the
     first source (by priority) that has members; falls back to
-    any-source avg (11_canonicalize_coords_and_lift_reviews.cypher:1-24)."""
+    any-source avg (11_canonicalize_coords_and_lift_reviews.cypher:1-24).
+
+    carry_cols (e.g. the canonical name and city) join the grouping key,
+    so they must be functionally dependent on the canonical id; the
+    canonical table then comes out of this one aggregation instead of
+    joins back to the member rows."""
 
     def src_avg(col: str, src: str):
         dec = F.when(F.col(source_col) == src, F.col(col).cast("decimal(18,6)"))
@@ -74,7 +80,7 @@ def priority_coalesced_coords(
         aggs.append(
             F.coalesce(*[src_avg(col, s) for s in priority], any_avg(col)).alias(f"canonical_{col}")
         )
-    return places.groupBy(canonical_col).agg(*aggs)
+    return places.groupBy(canonical_col, *carry_cols).agg(*aggs)
 
 
 def lift_reviews(

@@ -1571,7 +1571,10 @@ def q_sequential_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     # occurrence strictly after t1 (t2 = the first such), emit every type
     # c with an occurrence strictly after t2. Same existence semantics as
     # the join form; each (a,b,c) appears at most once per user, so the
-    # final count is the user-support count.
+    # final count is the user-support count. Every array access is get():
+    # an out-of-range subscript raises under ANSI mode, and a type with
+    # no occurrence after t1 (or an all-NULL ts group, whose array is
+    # empty) must yield NULL and drop out instead.
     pat = F.expr(
         """
         flatten(transform(tl, a ->
@@ -1579,10 +1582,10 @@ def q_sequential_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
             filter(
               transform(tl, b -> named_struct(
                 'tb', b.event_type,
-                't2', filter(b.tss, x -> x > a.tss[0])[0])),
+                't2', get(filter(b.tss, x -> x > get(a.tss, 0)), 0))),
               p -> p.t2 is not null),
             bp -> transform(
-              filter(tl, c -> c.tss[size(c.tss) - 1] > bp.t2),
+              filter(tl, c -> get(c.tss, size(c.tss) - 1) > bp.t2),
               c -> named_struct(
                 'ta', a.event_type, 'tb', bp.tb, 'tc', c.event_type))
           ))

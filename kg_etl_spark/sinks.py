@@ -3,11 +3,14 @@ Parquet, nested-document JSON.
 
 K1 contract CSVs are *contracts*: header always present (even for zero
 rows), deterministic row order, one file. The reference wrote these
-with pandas (`etl/er.py:317-338`); here the sort is a Spark orderBy and
-the single file comes from a coalesce(1) — correct for export-sized
-results. Anything big stays partitioned Parquet (K2/K3), where Spark's
-native append replaces the reference's read-concat-rewrite
-anti-pattern (`etl/reviews_jsonl.py:57-73`).
+with pandas (`etl/er.py:317-338`); here the rows are shuffled into one
+partition and sorted inside it (`repartition(1).sortWithinPartitions`),
+which gives the same rows in the same order as a global sort without
+the range-partition sampling job a Spark orderBy runs first — correct
+for export-sized results only, since one task sorts them all. Anything
+big stays partitioned Parquet (K2/K3), where Spark's native append
+replaces the reference's read-concat-rewrite anti-pattern
+(`etl/reviews_jsonl.py:57-73`).
 """
 
 from __future__ import annotations
@@ -31,8 +34,8 @@ def write_contract_csv(df: DataFrame, path: str, order_by: list[str] | None = No
     header line, not the part file.
     """
     tmp = path + ".__spark_tmp__"
-    out = df.orderBy(*order_by) if order_by else df
-    out.coalesce(1).write.mode("overwrite").option("header", True).csv(tmp)
+    out = df.repartition(1).sortWithinPartitions(*order_by) if order_by else df.coalesce(1)
+    out.write.mode("overwrite").option("header", True).csv(tmp)
     parts = sorted(glob.glob(os.path.join(tmp, "part-*.csv")))
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     if parts:
@@ -45,8 +48,10 @@ def write_contract_csv(df: DataFrame, path: str, order_by: list[str] | None = No
 
 def write_nested_json(df: DataFrame, path: str, order_by: list[str] | None = None) -> None:
     """K6: nested-document export (POI cards) — arrays of structs
-    serialize natively via the json sink."""
-    out = df.orderBy(*order_by) if order_by else df
+    serialize natively via the json sink. With order_by the documents
+    are written as one part file sorted on it (export-sized input, as
+    for the contract CSVs)."""
+    out = df.repartition(1).sortWithinPartitions(*order_by) if order_by else df
     out.write.mode("overwrite").json(path)
 
 

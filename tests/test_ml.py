@@ -448,6 +448,27 @@ def test_sequential_patterns_greedy_existence(spark):
     assert got == support
 
 
+def test_sequential_patterns_sparse_user(spark, tmp_path):
+    # One user with A@10 and B@5: nothing follows A's first event, so the
+    # lookup of the first later event hits an empty array, which a
+    # subscript turns into an error under ANSI mode. No user has three
+    # strictly ordered events, so the query must return no pattern.
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kg_etl_spark.queries.events import q_sequential_patterns
+
+    pq.write_table(
+        pa.table({
+            "user_id": pa.array([1, 1], pa.int64()),
+            "event_type": ["A", "B"],
+            "ts": pa.array([10_000_000_000, 5_000_000_000], pa.timestamp("ns")),
+        }),
+        str(tmp_path / "events.parquet"),
+    )
+    assert q_sequential_patterns(spark, str(tmp_path)).collect() == []
+
+
 def test_propensity_matching_brute_force(spark):
     import pandas as pd
 
