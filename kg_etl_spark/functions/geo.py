@@ -73,12 +73,6 @@ def in_bbox(
     return (lat >= south) & (lat <= north) & (lon >= west) & (lon <= east)
 
 
-def grid_bin(lat: Column, lon: Column, bin_deg: float = 0.01) -> tuple[Column, Column]:
-    """Spatial blocking bins (~1.1 km at 0.01°), the J6 blocking key."""
-    inv = 1.0 / bin_deg
-    return (F.floor(lat * inv).cast("long"), F.floor(lon * inv).cast("long"))
-
-
 def point_in_polygon_udf(polygon: list[tuple[float, float]]):
     """Ray-casting point-in-polygon as a vectorized pandas UDF.
 

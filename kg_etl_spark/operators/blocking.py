@@ -1,13 +1,12 @@
 """Grid-blocked spatial self-join — the J6 pattern (reference
 `etl/er.py:164-194`), re-expressed as a pure DataFrame plan.
 
-The reference loops bins in Python per city. Here: attach a grid bin,
-explode the LEFT side to its 9 neighbor bins, equi-join on
-(partition_key, bin) against the un-exploded RIGHT side, keep the upper
-triangle, filter by distance. Catalyst turns that into one shuffle on
-the bin key; AQE handles skewed bins. Scales linearly with data (bins
-bound candidate pairs), which is exactly why it survives 100 TB while a
-cross join would not.
+The reference loops bins in Python per city. Here it is the self-join
+form of `nearest.radius_join`: the frame joined with itself on the grid
+key derived from the radius, keeping the upper triangle (a < b).
+Catalyst turns that into one shuffle on the bin key; AQE handles skewed
+bins. Scales linearly with data (bins bound candidate pairs), which is
+exactly why it survives 100 TB while a cross join would not.
 """
 
 from __future__ import annotations
@@ -15,17 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kg_etl_spark.functions.geo import equirect_m, grid_bin
-from kg_etl_spark.operators.util import spread
-
-
-def neighbor_bins(lat_bin, lon_bin):
-    """Explode helper: the 3×3 neighborhood of a grid bin as a single
-    struct array (one explode, not two)."""
-    offs = [(i, j) for i in (-1, 0, 1) for j in (-1, 0, 1)]
-    return F.array(
-        *[F.struct((lat_bin + i).alias("b_lat"), (lon_bin + j).alias("b_lon")) for i, j in offs]
-    )
+from kg_etl_spark.operators.nearest import radius_join
 
 
 def blocked_pairs(
@@ -34,58 +23,21 @@ def blocked_pairs(
     lat_col: str = "lat",
     lon_col: str = "lon",
     partition_col: str | None = None,
-    bin_deg: float = 0.01,
     max_dist_m: float = 250.0,
     carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Candidate pairs (a_id < b_id) within max_dist_m, via grid blocking.
+    """Pairs (a_id < b_id) within max_dist_m, via grid blocking.
 
-    Returns columns a_<id>, b_<id>, a_/b_<carry>, meters.
+    Returns columns a_<id>, a_<carry>, b_<id>, b_<carry>, meters.
     """
-    lat, lon = F.col(lat_col), F.col(lon_col)
-    lb, nb = grid_bin(lat, lon, bin_deg)
-    # spread first: with a single-split input and a broadcast bin join,
-    # the whole explode+pair-filter pass would otherwise run in ONE task
-    base = spread(df, F.col(id_col)).withColumn("_lat_bin", lb).withColumn("_lon_bin", nb)
+    geo = [lat_col, lon_col, *([partition_col] if partition_col else [])]
 
-    keep = [id_col, lat_col, lon_col, *carry_cols]
-    if partition_col and partition_col not in keep:
-        keep.append(partition_col)
+    def side(prefix: str) -> DataFrame:
+        keep = [F.col(c).alias(f"{prefix}_{c}") for c in (id_col, *carry_cols)]
+        return df.select(*keep, *geo)
 
-    left = (
-        base.withColumn("_nb", F.explode(neighbor_bins(F.col("_lat_bin"), F.col("_lon_bin"))))
-        .select(*keep, F.col("_nb.b_lat").alias("_jb_lat"), F.col("_nb.b_lon").alias("_jb_lon"))
+    a_id, b_id = f"a_{id_col}", f"b_{id_col}"
+    pairs = radius_join(
+        side("a"), side("b"), a_id, b_id, max_dist_m, lat_col, lon_col, partition_col
     )
-    right = base.select(
-        *keep, F.col("_lat_bin").alias("_jb_lat"), F.col("_lon_bin").alias("_jb_lon")
-    )
-
-    # partition_col goes INTO the equi-join key (not a post-join filter):
-    # the shuffle then hashes on (partition, bin), which both shrinks the
-    # joined row set and spreads one hot geographic bin shared by many
-    # partitions across reducers.
-    extra = [F.col(partition_col).alias("_jp")] if partition_col else []
-    a = left.select(
-        [F.col(c).alias(f"a_{c}") for c in keep] + [F.col("_jb_lat"), F.col("_jb_lon")] + extra
-    )
-    b = right.select(
-        [F.col(c).alias(f"b_{c}") for c in keep] + [F.col("_jb_lat"), F.col("_jb_lon")] + extra
-    )
-
-    on = (["_jp"] if partition_col else []) + ["_jb_lat", "_jb_lon"]
-    pairs = a.join(b, on=on, how="inner").filter(F.col(f"a_{id_col}") < F.col(f"b_{id_col}"))
-    pairs = pairs.drop("_jp")
-
-    pairs = pairs.withColumn(
-        "meters",
-        equirect_m(
-            F.col(f"a_{lat_col}"), F.col(f"a_{lon_col}"), F.col(f"b_{lat_col}"), F.col(f"b_{lon_col}")
-        ),
-    ).filter(F.col("meters") <= max_dist_m)
-    # The 9-bin explode can produce the same pair from multiple bins
-    # only if a pair's bins are within 1 of each other in several
-    # offsets — each unordered pair is matched once per (bin of b that
-    # is a neighbor of bin of a). b is joined on its OWN bin, so each
-    # pair appears exactly once per b-bin ∈ neighbors(a-bin): that is
-    # unique. No dedup needed.
-    return pairs.drop("_jb_lat", "_jb_lon")
+    return pairs.filter(F.col(a_id) < F.col(b_id))

@@ -1,16 +1,16 @@
 """Connected components over an edge list (reference A7/X6:
 per-city union-find, `etl/er.py:205-222`).
 
-Two strategies, both deterministic (component id = min node id in the
-component, independent of edge iteration order — fixing the
-reference's order-dependent root identity, SURVEY §7.4):
+`connected_components` picks one of two strategies by edge count, both
+deterministic (component id = min node id in the component, independent
+of edge iteration order — fixing the reference's order-dependent root
+identity, SURVEY §7.4):
 
 1. `components_iterative` — distributed min-label propagation
    (alternating large-star/small-star style), O(log n) joins. This is
    the 100 TB path: no single group ever has to fit in one task.
-2. `components_grouped_unionfind` — `applyInPandas` union-find per
-   partition key (city), exact parity with the reference when groups
-   are small (a city's POIs fit trivially in one task).
+2. union-find in one `applyInPandas` task — exact, and far faster
+   while the edge list is small enough for one task.
 """
 
 from __future__ import annotations
@@ -74,13 +74,12 @@ def components_iterative(
     return labels
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    small_threshold: int = 2_000_000,
-) -> DataFrame:
-    """Size-adaptive components: below `small_threshold` edges the whole
+# Below this many edges the whole edge list fits one task.
+SMALL_THRESHOLD = 2_000_000
+
+
+def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+    """Size-adaptive components: up to `SMALL_THRESHOLD` edges the whole
     edge list fits one task → exact union-find via applyInPandas (a
     coarsened local solve, the standard cutover trick); above it, the
     distributed min-label iteration. Both return (node, comp) with
@@ -92,7 +91,7 @@ def connected_components(
     # the (possibly expensive) edge-producing lineage on every one.
     e = e.lineage_cut(eager=True)
     n = e.count()
-    if n > small_threshold:
+    if n > SMALL_THRESHOLD:
         return components_iterative(e)
 
     node_type = dict(e.dtypes)["src"]
@@ -102,7 +101,7 @@ def connected_components(
 
         def find(x):
             while parent[x] != x:
-                parent[x] = parent[parent[x]]
+                parent[x] = parent[parent[x]]  # path halving
                 x = parent[x]
             return x
 
@@ -112,6 +111,7 @@ def connected_components(
                     parent[v] = v
             ra, rb = find(a), find(b)
             if ra != rb:
+                # deterministic: smaller id wins as root
                 if rb < ra:
                     ra, rb = rb, ra
                 parent[rb] = ra
@@ -124,36 +124,3 @@ def connected_components(
         .groupBy("_g")
         .applyInPandas(uf, schema=f"node {node_type}, comp {node_type}")
     )
-
-
-def components_grouped_unionfind(
-    edges: DataFrame, src: str, dst: str, group_col: str
-) -> DataFrame:
-    """Union-find per group via applyInPandas (exact reference parity
-    for small per-group graphs). Output: (group_col, node, comp)."""
-
-    out_schema = f"{group_col} string, node string, comp string"
-
-    def uf(pdf: pd.DataFrame) -> pd.DataFrame:
-        parent: dict[str, str] = {}
-
-        def find(x: str) -> str:
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]  # path halving
-                x = parent[x]
-            return x
-
-        for a, b in zip(pdf[src], pdf[dst]):
-            for n in (a, b):
-                if n not in parent:
-                    parent[n] = n
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                # deterministic: smaller id wins as root
-                if rb < ra:
-                    ra, rb = rb, ra
-                parent[rb] = ra
-        rows = [(pdf[group_col].iloc[0], n, find(n)) for n in parent]
-        return pd.DataFrame(rows, columns=[group_col, "node", "comp"])
-
-    return edges.groupBy(group_col).applyInPandas(uf, schema=out_schema)

@@ -49,7 +49,6 @@ def candidate_links(
     lat_col: str = "lat",
     lon_col: str = "lon",
     partition_col: str | None = None,
-    bin_deg: float = 0.01,
     max_dist_m: float = 250.0,
     use_fuzzy: bool = False,
     carry_cols: tuple[str, ...] = (),
@@ -72,7 +71,6 @@ def candidate_links(
         lat_col=lat_col,
         lon_col=lon_col,
         partition_col=partition_col,
-        bin_deg=bin_deg,
         max_dist_m=max_dist_m,
         carry_cols=(name_col, "_toks", *carry_cols),
     )
@@ -101,7 +99,6 @@ def resolve_entities(
     lat_col: str = "lat",
     lon_col: str = "lon",
     partition_col: str | None = None,
-    bin_deg: float = 0.01,
     max_dist_m: float = 250.0,
     bands=None,
     sim_col: str = "name_jac",
@@ -119,7 +116,7 @@ def resolve_entities(
     canonical_name = longest member name, ties broken (name asc, id asc).
     """
     cands = candidate_links(
-        df, id_col, name_col, lat_col, lon_col, partition_col, bin_deg, max_dist_m, use_fuzzy,
+        df, id_col, name_col, lat_col, lon_col, partition_col, max_dist_m, use_fuzzy,
         carry_cols=carry_cols,
     )
     # Materialize the (small) link set once: everything downstream —

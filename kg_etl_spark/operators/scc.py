@@ -167,8 +167,8 @@ def _weak_relabel(
 def _tarjan_single_task(edges: DataFrame) -> DataFrame:
     """Exact SCC of a SMALL edge list in ONE executor task (iterative
     Tarjan inside applyInPandas, all edges in a single constant-keyed
-    group) — the size-adaptive finisher, mirroring
-    components_grouped_unionfind: below the cutover a single in-memory
+    group) — the size-adaptive finisher, mirroring the union-find
+    path of connected_components: below the cutover a single in-memory
     pass beats dozens of fixpoint shuffles by orders of magnitude."""
     import pandas as pd
     from pyspark.sql import types as T

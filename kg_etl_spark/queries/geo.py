@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kg_etl_spark.functions.geo import equirect_m, grid_bin, haversine_m, in_bbox, point_in_polygon_udf
+from kg_etl_spark.functions.geo import haversine_m, in_bbox, point_in_polygon_udf
 from kg_etl_spark.operators.blocking import blocked_pairs
 from kg_etl_spark.operators.components import connected_components
 from kg_etl_spark.operators.nearest import nearest_within, radius_join
@@ -205,9 +205,7 @@ def q_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kg_etl_spark.operators.triangles import triangle_counts
 
     cust = _with_coords(read_table(spark, sf_dir, "customer"), "c_custkey")
-    # bin must cover the radius in LONGITUDE too: 0.01° lon ≈ 715 m at
-    # lat 50 < 800 m, so the default bin would drop east-west pairs
-    pairs = blocked_pairs(cust, id_col="c_custkey", max_dist_m=800.0, bin_deg=0.02).select(
+    pairs = blocked_pairs(cust, id_col="c_custkey", max_dist_m=800.0).select(
         F.col("a_c_custkey").alias("a_id"), F.col("b_c_custkey").alias("b_id")
     )
     return triangle_counts(pairs)
@@ -237,7 +235,7 @@ def q_label_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kg_etl_spark.operators.communities import label_propagation
 
     cust = _with_coords(read_table(spark, sf_dir, "customer"), "c_custkey")
-    pairs = blocked_pairs(cust, id_col="c_custkey", max_dist_m=800.0, bin_deg=0.02).select(
+    pairs = blocked_pairs(cust, id_col="c_custkey", max_dist_m=800.0).select(
         F.col("a_c_custkey").alias("a_id"), F.col("b_c_custkey").alias("b_id")
     )
     return label_propagation(pairs, iterations=2)
@@ -283,7 +281,7 @@ def q_kcore_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kg_etl_spark.operators.kcore import kcore
 
     cust = _with_coords(read_table(spark, sf_dir, "customer"), "c_custkey")
-    pairs = blocked_pairs(cust, id_col="c_custkey", max_dist_m=800.0, bin_deg=0.02).select(
+    pairs = blocked_pairs(cust, id_col="c_custkey", max_dist_m=800.0).select(
         F.col("a_c_custkey").alias("a_id"), F.col("b_c_custkey").alias("b_id")
     )
     return kcore(pairs, k=3)
@@ -342,7 +340,7 @@ def q_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kg_etl_spark.operators.bfs import bfs_hops
 
     cust = _with_coords(read_table(spark, sf_dir, "customer"), "c_custkey")
-    pairs = blocked_pairs(cust, id_col="c_custkey", max_dist_m=800.0, bin_deg=0.02).select(
+    pairs = blocked_pairs(cust, id_col="c_custkey", max_dist_m=800.0).select(
         F.col("a_c_custkey").alias("a_id"), F.col("b_c_custkey").alias("b_id")
     )
     sources = cust.filter(F.col("c_custkey") % 500 == 0).select(
@@ -635,7 +633,7 @@ def q_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = _with_coords(read_table(spark, sf_dir, "customer"), "c_custkey")
     # multi-consumer cut: degrees + the 3-way triangle self-join would
     # otherwise each re-derive the blocking join (132 static Exchanges)
-    pairs = blocked_pairs(cust, id_col="c_custkey", max_dist_m=800.0, bin_deg=0.02).select(
+    pairs = blocked_pairs(cust, id_col="c_custkey", max_dist_m=800.0).select(
         F.col("a_c_custkey").alias("a_id"), F.col("b_c_custkey").alias("b_id")
     ).lineage_cut(eager=True)
     deg = (
@@ -719,9 +717,7 @@ def q_dbscan_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kg_etl_spark.operators.components import connected_components
 
     cust = _with_coords(read_table(spark, sf_dir, "customer"), "c_custkey")
-    pairs = blocked_pairs(
-        cust, id_col="c_custkey", max_dist_m=_DBSCAN_EPS_M, bin_deg=0.01
-    ).select(
+    pairs = blocked_pairs(cust, id_col="c_custkey", max_dist_m=_DBSCAN_EPS_M).select(
         F.col("a_c_custkey").alias("a_id"), F.col("b_c_custkey").alias("b_id")
     ).lineage_cut(eager=True)  # consumed 4× below
 
@@ -825,9 +821,7 @@ def q_weighted_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kg_etl_spark.operators.bfs import sssp_rounds
 
     cust = _with_coords(read_table(spark, sf_dir, "customer"), "c_custkey")
-    pairs = blocked_pairs(
-        cust, id_col="c_custkey", max_dist_m=800.0, bin_deg=0.02
-    ).select(
+    pairs = blocked_pairs(cust, id_col="c_custkey", max_dist_m=800.0).select(
         F.col("a_c_custkey").alias("a_id"),
         F.col("b_c_custkey").alias("b_id"),
         F.round("meters", 3).alias("w"),
@@ -878,9 +872,7 @@ def q_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kg_etl_spark.operators.bfs import harmonic_centrality
 
     cust = _with_coords(read_table(spark, sf_dir, "customer"), "c_custkey")
-    pairs = blocked_pairs(
-        cust, id_col="c_custkey", max_dist_m=800.0, bin_deg=0.02
-    ).select(
+    pairs = blocked_pairs(cust, id_col="c_custkey", max_dist_m=800.0).select(
         F.col("a_c_custkey").alias("a_id"),
         F.col("b_c_custkey").alias("b_id"),
         F.round("meters", 3).alias("w"),
@@ -939,7 +931,7 @@ def q_ktruss_spatial(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kg_etl_spark.operators.ktruss import ktruss
 
     cust = _with_coords(read_table(spark, sf_dir, "customer"), "c_custkey")
-    pairs = blocked_pairs(cust, id_col="c_custkey", max_dist_m=800.0, bin_deg=0.02).select(
+    pairs = blocked_pairs(cust, id_col="c_custkey", max_dist_m=800.0).select(
         F.col("a_c_custkey").alias("a_id"), F.col("b_c_custkey").alias("b_id")
     )
     return ktruss(pairs, k=3)
@@ -1006,7 +998,7 @@ def q_modularity_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kg_etl_spark.operators.communities import modularity
 
     cust = _with_coords(read_table(spark, sf_dir, "customer"), "c_custkey")
-    pairs = blocked_pairs(cust, id_col="c_custkey", max_dist_m=800.0, bin_deg=0.02).select(
+    pairs = blocked_pairs(cust, id_col="c_custkey", max_dist_m=800.0).select(
         F.col("a_c_custkey").alias("a_id"), F.col("b_c_custkey").alias("b_id")
     )
     asg = read_table(spark, sf_dir, "customer").select(

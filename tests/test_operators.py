@@ -10,7 +10,7 @@ import random
 from pyspark.sql import functions as F
 
 from kg_etl_spark.operators.blocking import blocked_pairs
-from kg_etl_spark.operators.components import components_grouped_unionfind, components_iterative
+from kg_etl_spark.operators.components import components_iterative
 from kg_etl_spark.operators.dedup import exact_dedup, minhash_lsh_pairs, ngram_jaccard_pairs, simhash_pairs
 from kg_etl_spark.operators.nearest import nearest_within, radius_join
 from kg_etl_spark.operators.similarity import (
@@ -38,7 +38,7 @@ def test_blocked_pairs_matches_brute_force(spark):
     df = spark.createDataFrame(pts, "id long, lat double, lon double")
     got = {
         (r["a_id"], r["b_id"])
-        for r in blocked_pairs(df, "id", max_dist_m=250.0, bin_deg=0.01).collect()
+        for r in blocked_pairs(df, "id", max_dist_m=250.0).collect()
     }
     want = {
         (a[0], b[0])
@@ -100,18 +100,6 @@ def test_components_iterative_matches_unionfind(spark):
     got = {r["node"]: r["comp"] for r in components_iterative(df).collect()}
     want = _py_components(edges)
     assert got == want
-
-
-def test_components_grouped_unionfind(spark):
-    df = spark.createDataFrame(
-        [("c1", "a", "b"), ("c1", "b", "c"), ("c1", "x", "y"), ("c2", "a", "z")],
-        "city string, src string, dst string",
-    )
-    rows = components_grouped_unionfind(df, "src", "dst", "city").collect()
-    by = {(r["city"], r["node"]): r["comp"] for r in rows}
-    assert by[("c1", "a")] == by[("c1", "c")] == "a"
-    assert by[("c1", "x")] == by[("c1", "y")] == "x"
-    assert by[("c2", "z")] == "a"  # same letters, different city partition
 
 
 def test_topk_per_group(spark):

@@ -4,6 +4,7 @@ multiple seeds per property, one spark session."""
 
 from __future__ import annotations
 
+import math
 import random
 
 import pytest
@@ -12,7 +13,8 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from kg_etl_spark.operators.blocking import blocked_pairs
-from kg_etl_spark.operators.components import connected_components
+from kg_etl_spark.operators.components import components_iterative, connected_components
+from kg_etl_spark.operators.nearest import nearest_within, radius_join
 from kg_etl_spark.operators.skew import salted_join
 
 
@@ -45,25 +47,38 @@ def test_components_match_bfs_reference(spark, seed):
     edges = [(rng.randrange(n_nodes), rng.randrange(n_nodes)) for _ in range(n_edges)]
     expect = _py_components(edges)
     edf = spark.createDataFrame(edges, "src long, dst long")
-    for thresh in (10**9, 0):  # union-find path and iterative path
-        got = {r["node"]: r["comp"] for r in connected_components(edf, small_threshold=thresh).collect()}
-        assert got == expect, f"seed={seed} threshold={thresh}"
+    # the size dispatch (union-find path at this size) and the distributed path
+    for cc in (connected_components, components_iterative):
+        got = {r["node"]: r["comp"] for r in cc(edf).collect()}
+        assert got == expect, f"seed={seed} {cc.__name__}"
 
 
 def _equirect_m(lat1, lon1, lat2, lon2):
-    import math
-
     x = math.radians(lon2 - lon1) * math.cos(math.radians((lat1 + lat2) / 2))
     y = math.radians(lat2 - lat1)
     return 6371000.0 * math.sqrt(x * x + y * y)
 
 
-@pytest.mark.parametrize("seed", [0, 1])
-def test_blocked_pairs_match_brute_force(spark, seed):
+@pytest.mark.parametrize(
+    "seed, lat0",
+    [pytest.param(0, 50.0, id="0"), pytest.param(1, 50.0, id="1")]
+    + [
+        pytest.param(2, lat0, id=f"lat{lat0:g}")
+        for lat0 in (0.0, 50.0, 66.0, 70.0, 75.0, 80.0, -72.0, 85.0)
+    ],
+)
+def test_blocked_pairs_match_brute_force(spark, seed, lat0):
+    """The grid join equals brute force in every latitude band, in its
+    self-join form (blocked_pairs), its pair form (radius_join) and its
+    rank-1 form (nearest_within)."""
     rng = random.Random(seed)
+    # ~1.1 km north-south by ~2.2 km east-west at any latitude, so many
+    # pairs lie nearly east-west at the radius, where longitude bins
+    # that are too narrow drop them
+    lon_span = 0.02 / math.cos(math.radians(lat0))
     pts = [
-        (i, 50.0 + rng.uniform(0, 0.02), 8.0 + rng.uniform(0, 0.02))
-        for i in range(80)
+        (i, lat0 + rng.uniform(0, 0.01), 8.0 + rng.uniform(0, lon_span))
+        for i in range(150)
     ]
     thresh = 300.0
     expect = {
@@ -77,7 +92,23 @@ def test_blocked_pairs_match_brute_force(spark, seed):
         (r["a_id"], r["b_id"])
         for r in blocked_pairs(df, id_col="id", max_dist_m=thresh).collect()
     }
-    assert got == expect, f"seed={seed}"
+    assert got == expect, f"blocked_pairs seed={seed} lat0={lat0}"
+
+    left, right = pts[0::2], pts[1::2]
+    dist = {
+        (a[0], b[0]): _equirect_m(a[1], a[2], b[1], b[2]) for a in left for b in right
+    }
+    within = {k: m for k, m in dist.items() if m <= thresh}
+    ldf = df.filter(F.col("id") % 2 == 0)
+    rdf = df.filter(F.col("id") % 2 == 1).withColumnRenamed("id", "rid")
+    got = {(r["id"], r["rid"]) for r in radius_join(ldf, rdf, "id", "rid", thresh).collect()}
+    assert got == set(within), f"radius_join seed={seed} lat0={lat0}"
+
+    nearest = {}
+    for (lid, rid), m in sorted(within.items(), key=lambda kv: (kv[1], kv[0][1])):
+        nearest.setdefault(lid, rid)
+    got = {r["id"]: r["rid"] for r in nearest_within(ldf, rdf, "id", "rid", thresh).collect()}
+    assert got == nearest, f"nearest_within seed={seed} lat0={lat0}"
 
 
 @pytest.mark.parametrize("seed", [0])
