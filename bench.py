@@ -293,7 +293,7 @@ def _drop_query_state() -> None:
                 # blocks with TRUNCATED lineage — evicting them would
                 # make the shared frame unrecomputable, and they are
                 # model-sized by contract
-                if is_shared_cut(sc, int(jid)):
+                if is_shared_cut(jrdd):
                     continue
                 jrdd.unpersist(False)
             _SPARK.sparkContext._jvm.System.gc()

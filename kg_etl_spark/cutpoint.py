@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import weakref
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 
 
@@ -36,96 +37,56 @@ def lineage_cut(df: DataFrame, eager: bool = True) -> DataFrame:
     return df.localCheckpoint(eager=eager)
 
 
-# Block ids of SESSION-SHARED cuts (the memoized derivations several
-# queries consume, e.g. the transition-edge frame), keyed
-# (applicationId, rdd id): RDD ids restart at 0 per SparkContext, and
-# one process can run several contexts (pytest sessions, the 7-vs-32
-# determinism gate), so a bare id could shield an unrelated RDD in a
-# later context.  A localCheckpoint stores its data in persisted
-# blocks with TRUNCATED lineage — evicting them makes the frame
-# unrecomputable — so any housekeeping that unpersists completed-query
-# state between queries (bench.py's _drop_query_state) must skip these
-# ids.  Reliable-checkpoint mode stores files, not blocks, so nothing
-# registers (and nothing needs protecting).
-SHARED_CUT_RDD_IDS: set = set()
+# RDD name that marks a SESSION-SHARED cut (a memoized derivation
+# several queries consume, e.g. the transition-edge frame).  A
+# localCheckpoint keeps its data in persisted blocks with TRUNCATED
+# lineage, so evicting them makes the frame unrecomputable:
+# housekeeping that unpersists completed-query state between queries
+# (bench.py's _drop_query_state) skips RDDs carrying this name.
+SHARED_CUT_NAME = "kg_etl_spark.shared_cut"
 
 
-def is_shared_cut(sc, rdd_id: int) -> bool:
-    """True when ``rdd_id`` belongs to a shared cut of THIS context."""
+def is_shared_cut(jrdd) -> bool:
+    """True when the JVM RDD ``jrdd`` (e.g. a value of the
+    SparkContext's persisted-RDD map) is the data of a shared cut."""
+    return jrdd.name() == SHARED_CUT_NAME
+
+
+def _unpersist(jrdd) -> None:
     try:
-        return (sc.applicationId, int(rdd_id)) in SHARED_CUT_RDD_IDS
-    except Exception:  # noqa: BLE001 - conservative: don't shield
-        return False
-
-
-def _release_shared_cut(app_id: str, ids: frozenset) -> None:
-    """Unregister (and unpersist, when the owning context is still the
-    active one) a dead shared cut's blocks — the eviction path the r8
-    verdict asked for: without it a long-lived session serving many
-    frames accumulates flush-protected localCheckpoint blocks on
-    executors monotonically.  Runs from a ``weakref.finalize`` hook on
-    the CUT frame (r9 ADVICE fix — registering on the source made a
-    consumer holding the cut past the source's lifetime race GC for
-    its own blocks, with no recompute path since localCheckpoint
-    truncates lineage): the weak memo already ties the cut's
-    reachability to the source, so when the source dies the memo entry
-    drops, the cut becomes unreachable unless externally held, and the
-    blocks are released exactly when the LAST handle — memo or
-    external — goes away."""
-    SHARED_CUT_RDD_IDS.difference_update((app_id, i) for i in ids)
-    try:
-        from pyspark import SparkContext
-
-        sc = SparkContext._active_spark_context
-        if sc is None or sc.applicationId != app_id:
-            return  # context gone: its blocks died with it
-        for jid, jrdd in sc._jsc.getPersistentRDDs().items():
-            if int(jid) in ids:
-                jrdd.unpersist(False)
-    except Exception:  # noqa: BLE001 - release is best-effort
+        jrdd.unpersist(False)
+    except Py4JError:  # the owning SparkContext was stopped first
         pass
 
 
-def shared_lineage_cut(df: DataFrame, source: DataFrame | None = None) -> DataFrame:
-    """:func:`lineage_cut` (eager) for MEMOIZED multi-query frames,
-    registering the cut's persisted block ids in
-    :data:`SHARED_CUT_RDD_IDS` so inter-query block flushes leave the
-    shared materialization alone.  Eager: the before/after diff of the
-    persisted-RDD map is only well-defined when materialization happens
-    here, and the first consumer pays it either way.
+def shared_lineage_cut(df: DataFrame) -> DataFrame:
+    """:func:`lineage_cut` (eager) for MEMOIZED multi-query frames.
 
-    Lifecycle contract (r8 verdict directive #4, hardened per the r9
-    ADVICE): the finalizer is registered on the CUT frame itself.  The
-    weak-keyed memo makes the cut's reachability follow the source —
-    ``session.clear_read_memo`` on an sf_dir swap drops the scan
-    frame, the memo entry follows, and once no consumer holds the cut
-    either, the finalizer unregisters + unpersists its blocks.  A
-    consumer that DOES hold the CUT FRAME ITSELF past the source's
+    The cut marks its own checkpointed RDD (the ``LogicalRDD`` at the
+    root of the result's plan) with :data:`SHARED_CUT_NAME`, so
+    inter-query block flushes leave the shared materialization alone,
+    and a ``weakref.finalize`` on the cut frame unpersists exactly
+    that RDD when the frame dies.  Nothing else is touched, so a cut
+    another thread makes at the same time is neither shielded nor
+    released by this one.  Reliable-checkpoint mode stores files, not
+    blocks: the name and the unpersist then do nothing.
+
+    Lifecycle contract: the weak-keyed memo makes the cut's
+    reachability follow the source — ``session.clear_read_memo`` on an
+    sf_dir swap drops the scan frame, the memo entry follows, and once
+    no consumer holds the cut either, its blocks are released.  A
+    consumer that holds the CUT FRAME ITSELF past the source's
     lifetime keeps the blocks alive.  Holding only a DERIVED DataFrame
-    is NOT enough: weakref.finalize is registered on the Python
-    cut-frame object and a derived plan keeps no Python reference to
-    it, so once source and cut objects are both collected the blocks
-    are unpersisted with no recompute path (localCheckpoint truncates
-    lineage) — callers that outlive the memo must retain the cut
-    (r10 ADVICE; pinned by test_round11's derived-frame case).  The
-    ``source`` parameter is retained for call-site documentation of
-    which memo key owns the cut; eviction no longer depends on it."""
-    sc = df.sparkSession.sparkContext
-    try:
-        before = set(sc._jsc.getPersistentRDDs().keys())
-    except Exception:  # noqa: BLE001 - registry is best-effort
-        before = None
+    is NOT enough: the finalizer is registered on the Python cut-frame
+    object and a derived plan keeps no Python reference to it, so once
+    source and cut objects are both collected the blocks are
+    unpersisted with no recompute path — callers that outlive the memo
+    must retain the cut (pinned by test_round11's derived-frame
+    case)."""
     out = lineage_cut(df, eager=True)
-    if before is not None:
-        try:
-            after = set(sc._jsc.getPersistentRDDs().keys())
-            app = sc.applicationId
-            new_ids = frozenset(int(i) for i in after - before)
-            SHARED_CUT_RDD_IDS.update((app, i) for i in new_ids)
-            if new_ids:
-                weakref.finalize(out, _release_shared_cut, app, new_ids)
-        except Exception:  # noqa: BLE001
-            pass
+    jrdd = out._jdf.queryExecution().analyzed().rdd()
+    jrdd.setName(SHARED_CUT_NAME)
+    weakref.finalize(out, _unpersist, jrdd).atexit = False
     return out
 
 

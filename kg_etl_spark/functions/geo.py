@@ -4,13 +4,12 @@ Capability parity with the reference's geo helpers (haversine
 `etl/utils.py:62-66`, equirectangular `etl/er.py:146-150`, km→deg buffer
 `etl/utils.py:237-246`, bbox containment `etl/utils.py:259-313`,
 ray-cast point-in-polygon `etl/utils.py:134-151`), re-expressed as
-Catalyst-codegen-able expressions. Point-in-polygon is the one pandas
-UDF (no native equivalent); everything else stays JVM-side.
+Catalyst-codegen-able expressions: everything stays JVM-side, including
+point-in-polygon (ray casting with higher-order array functions).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -73,36 +72,28 @@ def in_bbox(
     return (lat >= south) & (lat <= north) & (lon >= west) & (lon <= east)
 
 
-def point_in_polygon_udf(polygon: list[tuple[float, float]]):
-    """Ray-casting point-in-polygon as a vectorized pandas UDF.
+def point_in_polygon(lat: Column, lon: Column, poly: Column) -> Column:
+    """Ray-casting point-in-polygon over an ``array<struct<lat,lon>>``
+    polygon column (a column or an ``F.array`` of ``F.struct``
+    literals), with native higher-order functions: count the edges a
+    ray from the point crosses via ``aggregate`` over the vertex index.
+    NULL or NaN coordinates are outside (FALSE, never NULL)."""
+    n = F.size(poly)
+    idx = F.sequence(F.lit(0), n - 1)
 
-    `polygon` is a driver-side list of (lat, lon) — small config data,
-    closed over and shipped with the task (equivalent to a broadcast).
-    """
-    from pyspark.sql.functions import pandas_udf
+    def crossing(i):
+        vi = F.element_at(poly, i + 1)
+        vj = F.element_at(poly, F.when(i == 0, n).otherwise(i))
+        yi, xi = vi["lat"], vi["lon"]
+        yj, xj = vj["lat"], vj["lon"]
+        return F.when(
+            ((xi > lon) != (xj > lon))
+            & (lat < (yj - yi) * (lon - xi) / (xj - xi) + yi),
+            1,
+        ).otherwise(0)
 
-    poly = [(float(a), float(b)) for a, b in polygon]
-
-    @pandas_udf("boolean")
-    def _pip(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        n = len(poly)
-        out = []
-        for y, x in zip(lat.values, lon.values):
-            if y != y or x != x:  # NaN
-                out.append(False)
-                continue
-            inside = False
-            j = n - 1
-            for i in range(n):
-                yi, xi = poly[i]
-                yj, xj = poly[j]
-                if (xi > x) != (xj > x) and y < (yj - yi) * (x - xi) / (xj - xi) + yi:
-                    inside = not inside
-                j = i
-            out.append(inside)
-        return pd.Series(out)
-
-    return _pip
+    crossings = F.aggregate(idx, F.lit(0), lambda acc, i: acc + crossing(i))
+    return F.coalesce((n >= 3) & (crossings % 2 == 1), F.lit(False))
 
 
 _GEOHASH32 = "0123456789bcdefghjkmnpqrstuvwxyz"

@@ -118,12 +118,11 @@ def nfkd_ascii_udf():
     return _deaccent
 
 
-def fuzzy_ratio_udf(kind: str = "max3"):
-    """rapidfuzz name similarity (0..1) — vectorized pandas UDF.
-
-    kind='max3': max(token_set_ratio, token_sort_ratio, partial_ratio)
-    (ER variant); kind='qratio': QRatio (utils variant). Falls back to a
-    difflib-based ratio when rapidfuzz is absent in the environment.
+def fuzzy_ratio_udf():
+    """rapidfuzz name similarity (0..1) — vectorized pandas UDF:
+    max(token_set_ratio, token_sort_ratio, partial_ratio), the ER
+    variant. Falls back to a difflib-based ratio when rapidfuzz is
+    absent in the environment.
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -131,8 +130,6 @@ def fuzzy_ratio_udf(kind: str = "max3"):
         from rapidfuzz import fuzz
 
         def score(a: str, b: str) -> float:
-            if kind == "qratio":
-                return fuzz.QRatio(a, b) / 100.0
             return (
                 max(fuzz.token_set_ratio(a, b), fuzz.token_sort_ratio(a, b), fuzz.partial_ratio(a, b))
                 / 100.0

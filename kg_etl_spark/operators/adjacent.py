@@ -327,7 +327,7 @@ def transition_edges_cut(ev: DataFrame) -> DataFrame:
     discipline applied to the derivation itself). Frames die, entries
     follow; sessions that swap an sf_dir mid-run already clear the
     read memo, which drops the event frame and with it this entry.
-    The cut registers as session-shared (cutpoint.shared_lineage_cut)
+    The cut marks itself session-shared (cutpoint.shared_lineage_cut)
     so inter-query block flushes skip its blocks — evicting a
     localCheckpoint's blocks would make the frame unrecomputable."""
     from kg_etl_spark.cutpoint import shared_lineage_cut
@@ -335,7 +335,7 @@ def transition_edges_cut(ev: DataFrame) -> DataFrame:
     return _memo_get(
         ev,
         ("trans_edges_cut",),
-        lambda: shared_lineage_cut(transition_edges(ev).distinct(), source=ev),
+        lambda: shared_lineage_cut(transition_edges(ev).distinct()),
     )
 
 
@@ -347,7 +347,7 @@ def undirected_transition_edges_cut(ev: DataFrame) -> DataFrame:
     return _memo_get(
         ev,
         ("undirected_trans_edges_cut",),
-        lambda: shared_lineage_cut(undirected_transition_edges(ev), source=ev),
+        lambda: shared_lineage_cut(undirected_transition_edges(ev)),
     )
 
 

@@ -21,30 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from kg_etl_spark.functions.geo import haversine_m, in_bbox
+from kg_etl_spark.functions.geo import haversine_m, in_bbox, point_in_polygon
 from kg_etl_spark.functions.text import normalize_name
-
-
-def _polygon_contains(lat, lon, poly) -> F.Column:
-    """Ray-casting over an ArrayType(Struct<lat,lon>) polygon column,
-    expressed with native higher-order functions (no UDF): count
-    crossing edges via aggregate over the vertex index."""
-    n = F.size(poly)
-    idx = F.sequence(F.lit(0), n - 1)
-
-    def crossing(i):
-        vi = F.element_at(poly, i + 1)
-        vj = F.element_at(poly, F.when(i == 0, n).otherwise(i))
-        yi, xi = vi["lat"], vi["lon"]
-        yj, xj = vj["lat"], vj["lon"]
-        return F.when(
-            ((xi > lon) != (xj > lon))
-            & (lat < (yj - yi) * (lon - xi) / (xj - xi) + yi),
-            1,
-        ).otherwise(0)
-
-    crossings = F.aggregate(idx, F.lit(0), lambda acc, i: acc + crossing(i))
-    return (n >= 3) & (crossings % 2 == 1)
 
 
 def assign_city(
@@ -67,7 +45,7 @@ def assign_city(
     c = cities.select(*[F.col(col).alias(f"_ct_{col}") for col in cities.columns])
     cand = places.crossJoin(F.broadcast(c))
     dist = haversine_m(lat, lon, F.col("_ct_center_lat"), F.col("_ct_center_lon"))
-    poly_hit = has_coords & _polygon_contains(lat, lon, F.col("_ct_polygon"))
+    poly_hit = has_coords & point_in_polygon(lat, lon, F.col("_ct_polygon"))
     bbox_hit = has_coords & in_bbox(
         lat, lon,
         F.col("_ct_bbox_south"), F.col("_ct_bbox_west"),
@@ -106,16 +84,12 @@ def assign_city(
     return places.join(best, places[id_col] == F.col("_aid"), "left").drop("_aid")
 
 
-def geometry_guard(
-    assigned: DataFrame, hint_slug_col: str, strict: bool = True
-) -> DataFrame:
+def geometry_guard(assigned: DataFrame, hint_slug_col: str) -> DataFrame:
     """P7: drop rows whose recomputed slug contradicts a pre-existing
-    one (strict) or null out the contradiction (lenient)."""
+    one."""
     mismatch = (
         F.col(hint_slug_col).isNotNull()
         & F.col("city_slug").isNotNull()
         & (F.col(hint_slug_col) != F.col("city_slug"))
     )
-    if strict:
-        return assigned.filter(~mismatch)
-    return assigned.withColumn("city_slug", F.when(mismatch, None).otherwise(F.col("city_slug")))
+    return assigned.filter(~mismatch)

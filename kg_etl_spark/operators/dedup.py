@@ -15,12 +15,12 @@ Everything native (xxhash64, higher-order array fns); no Python UDFs.
 from __future__ import annotations
 
 import warnings
-import weakref as _weakref
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kg_etl_spark.functions.text import word_shingles
+from kg_etl_spark.operators.rankdev import _memo_get
 from kg_etl_spark.operators.textquality import ws_tokens
 from kg_etl_spark.operators.util import spread
 
@@ -430,61 +430,20 @@ def ngram_containment_pairs_adaptive(
     threshold: float = 0.9,
     max_df: int | None = None,
     hash_shingles: bool = False,
-    n_docs: int | None = None,
 ) -> DataFrame:
     """Size-adaptive containment dispatch — the containment twin of
     :func:`ngram_jaccard_pairs_adaptive`: plain inverted index below
     :data:`PREFIX_JOIN_MIN_DOCS` docs (the prefix pipeline's fixed
     stage cost dominates small corpora), prefix × full ssjoin above
-    (the 100 TB path).  Shares the same weak-keyed count memo, same
+    (the 100 TB path).  Shares the same per-frame count memo, same
     property-tested row-identical branch contract."""
-    if n_docs is None:
-        n_docs = _NDOCS_MEMO.get(df)
-    if n_docs is None:
-        n_docs = df.count()
-        _NDOCS_MEMO[df] = n_docs
-    if n_docs >= PREFIX_JOIN_MIN_DOCS:
+    if _memo_get(df, ("n_docs",), df.count) >= PREFIX_JOIN_MIN_DOCS:
         return ngram_containment_pairs_prefix(
             df, id_col, text_col, n, threshold, max_df, hash_shingles
         )
     return ngram_containment_pairs(
         df, id_col, text_col, n, threshold, max_df, hash_shingles
     )
-
-
-def _minhash_mins(ex: DataFrame, num_hashes: int) -> DataFrame:
-    """(_id, _h0.._h{n-1}) min-signature aggregate over an exploded
-    (_id, _hs) hashed-shingle stream: per seed i, min(xxhash64(_hs, i)).
-    ONE hash-aggregate of num_hashes mins; map-side partials keep the
-    shuffle at one row per doc. The single definition of the hash
-    family — both the standalone signature builder and the LSH pair
-    operator go through it, so the seed scheme cannot drift."""
-    return ex.groupBy("_id").agg(
-        *[F.min(F.xxhash64(F.col("_hs"), F.lit(i))).alias(f"_h{i}") for i in range(num_hashes)]
-    )
-
-
-def minhash_signatures_df(shingled: DataFrame, num_hashes: int = 64) -> DataFrame:
-    """(_id, _sig): MinHash signature per doc — per seed i,
-    min(xxhash64(shingle, i)). Standalone STRING-shingle variant
-    ((_id, _sh array<string>) input); the LSH pair/index operators
-    instead band over `_shingled_hashed` token-hash shingles — the
-    two families are intentionally distinct input contracts, and
-    cross-comparing their signatures is meaningless.
-
-    The variable-length shingle string is hashed ONCE, then the hash
-    family derives by re-hashing the fixed 8-byte long with per-family
-    seeds — ~num_hashes× less string hashing. The aggregate is a hard
-    attribute boundary, so downstream banding expressions reference the
-    materialized signature instead of re-inlining 64×|shingles| hash
-    evals per use (an array-expression formulation was ~30× slower for
-    exactly that reason).
-    """
-    ex = shingled.select("_id", F.explode("_sh").alias("_s")).select(
-        "_id", F.xxhash64(F.col("_s")).alias("_hs")
-    )
-    mins = _minhash_mins(ex, num_hashes)
-    return mins.select("_id", F.array(*[F.col(f"_h{i}") for i in range(num_hashes)]).alias("_sig"))
 
 
 def _band_table(sigd: DataFrame, num_hashes: int, bands: int) -> DataFrame:
@@ -921,33 +880,12 @@ def ngram_jaccard_pairs_prefix(
 # dominates and plain wins outright.
 PREFIX_JOIN_MIN_DOCS = 100_000
 
-# Dispatch-probe memo (r9 ADVICE fix): count-star is pushed down only
-# for bare parquet scans, so for derived/filtered frames — and on
-# repeated calls (bench warmup + timed runs) — an unmemoized probe
-# costs a full pass per invocation.  Weak-keyed like the rankdev stats
-# memo: the entry dies with the frame.
-# Staleness bound (r10 ADVICE): the memo is keyed on the DataFrame
-# OBJECT, so if the underlying source grows while the same frame object
-# is reused (files appended to a parquet dir behind a long-lived
-# memoized scan), the probe keeps serving the count observed at first
-# dispatch.  Results are unaffected — both branches are row-identical
-# by property test — but a corpus that grows past
-# PREFIX_JOIN_MIN_DOCS can stay on the plain Σdf² branch.  The refresh
-# path is the existing ``n_docs`` parameter: callers that re-scan a
-# mutated source should pass the fresh count (or a new frame object)
-# to force re-dispatch.
-_NDOCS_MEMO: "_weakref.WeakKeyDictionary[DataFrame, int]" = (
-    _weakref.WeakKeyDictionary()
-)
-
-
 def ngram_jaccard_pairs_adaptive(
     df: DataFrame,
     id_col: str,
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.8,
-    n_docs: int | None = None,
 ) -> DataFrame:
     """Size-adaptive pair generator: the plain inverted-index join
     below :data:`PREFIX_JOIN_MIN_DOCS` documents (its Sigma(df^2)
@@ -961,14 +899,9 @@ def ngram_jaccard_pairs_adaptive(
     embedding near-dup size dispatch (operators/similarity.py).
 
     The dispatch probe runs AT MOST ONCE per source frame: the count
-    is memoized weak-keyed on ``df`` (bench warmup + timed runs reuse
-    it), and callers that already know the size pass ``n_docs``."""
-    if n_docs is None:
-        n_docs = _NDOCS_MEMO.get(df)
-    if n_docs is None:
-        n_docs = df.count()  # one count-star job (parquet-pushed on scans)
-        _NDOCS_MEMO[df] = n_docs
-    if n_docs >= PREFIX_JOIN_MIN_DOCS:
+    is memoized in the weak-keyed per-frame memo (bench warmup + timed
+    runs reuse it; a new frame object probes afresh)."""
+    if _memo_get(df, ("n_docs",), df.count) >= PREFIX_JOIN_MIN_DOCS:
         return ngram_jaccard_pairs_prefix(df, id_col, text_col, n, threshold)
     return ngram_jaccard_pairs(df, id_col, text_col, n, threshold)
 

@@ -45,13 +45,6 @@ def _h32(key: Column, a: int, b: int) -> Column:
     )
 
 
-def _h32_sql(key: str, a: int, b: int) -> str:
-    """The ANSI mirror — valid verbatim in DuckDB and Spark SQL for
-    keys below ~2^31 (the oracle regime; the engine side has no such
-    limit thanks to the split form)."""
-    return f"(({key} % {_M32}) * {a} + {b}) % {_M32}"
-
-
 def cms_build(
     df: DataFrame, key_col: str, d: int = 4, w: int = 256
 ) -> DataFrame:

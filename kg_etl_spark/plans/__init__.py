@@ -16,13 +16,6 @@ def physical_plan(df: DataFrame) -> str:
     return buf.getvalue()
 
 
-def assert_in_plan(df: DataFrame, *needles: str) -> None:
-    plan = physical_plan(df)
-    missing = [n for n in needles if n not in plan]
-    if missing:
-        raise AssertionError(f"plan missing {missing}:\n{plan}")
-
-
 def codegen_plan(df: DataFrame) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):

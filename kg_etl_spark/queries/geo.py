@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kg_etl_spark.functions.geo import haversine_m, in_bbox, point_in_polygon_udf
+from kg_etl_spark.functions.geo import haversine_m, in_bbox, point_in_polygon
 from kg_etl_spark.operators.blocking import blocked_pairs
 from kg_etl_spark.operators.components import connected_components
 from kg_etl_spark.operators.nearest import nearest_within, radius_join
@@ -401,19 +401,21 @@ GROUP BY s.s_suppkey
 """
 
 
-# --- point-in-polygon UDF (X2/P6) --------------------------------------
+# --- point-in-polygon (X2/P6) ------------------------------------------
 
 # Diamond (convex) polygon centered off the coordinate grid so no point
 # sits on the boundary; the oracle uses the equivalent L1 half-plane
-# test, the Spark side runs the general ray-casting pandas UDF.
+# test, the Spark side runs the general ray-casting kernel.
 _DIAMOND = [(50.2504, 8.1501), (50.1501, 8.2504), (50.0498, 8.1501), (50.1501, 8.0498)]
 
 
 def q_point_in_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = _with_coords(read_table(spark, sf_dir, "customer"), "c_custkey")
-    pip = point_in_polygon_udf(_DIAMOND)
+    poly = F.array(
+        *[F.struct(F.lit(a).alias("lat"), F.lit(b).alias("lon")) for a, b in _DIAMOND]
+    )
     return cust.select(
-        "c_custkey", pip(F.col("lat"), F.col("lon")).alias("inside")
+        "c_custkey", point_in_polygon(F.col("lat"), F.col("lon"), poly).alias("inside")
     )
 
 

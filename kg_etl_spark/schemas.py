@@ -100,12 +100,3 @@ def normalize_columns(df: DataFrame, contract: T.StructType) -> DataFrame:
             col = col.try_cast(field.dataType)
         selected.append(col.alias(field.name))
     return df.select(*selected)
-
-
-def assert_required(df: DataFrame, required: tuple[str, ...]) -> DataFrame:
-    """Fail-fast required-column assertion (reference
-    `etl/airbnb/staging.py:26-28`)."""
-    missing = [c for c in required if c not in df.columns]
-    if missing:
-        raise ValueError(f"missing required columns: {missing}; have {df.columns}")
-    return df

@@ -25,3 +25,19 @@ def spark_h32_probe(spark):
         return df.collect()[0]["h"]
 
     return probe
+
+
+@pytest.fixture
+def shielded_rdd_ids(spark):
+    """Ids of the persisted RDDs a between-query flush skips (the
+    shared lineage cuts), read from the live persisted-RDD map."""
+    from kg_etl_spark.cutpoint import is_shared_cut
+
+    def ids() -> set:
+        return {
+            int(i)
+            for i, jrdd in spark.sparkContext._jsc.getPersistentRDDs().items()
+            if is_shared_cut(jrdd)
+        }
+
+    return ids

@@ -6,7 +6,7 @@ import math
 
 from pyspark.sql import functions as F
 
-from kg_etl_spark.functions.geo import equirect_m, haversine_m, in_bbox, point_in_polygon_udf
+from kg_etl_spark.functions.geo import equirect_m, haversine_m, in_bbox, point_in_polygon
 from kg_etl_spark.functions.ids import canonical_id_str, prefixed_id, sha1_id
 from kg_etl_spark.functions.stats import bucket, group_zscore
 from kg_etl_spark.functions.text import (
@@ -54,8 +54,10 @@ def test_point_in_polygon(spark):
         [(5.0, 5.0, True), (15.0, 5.0, False), (None, 5.0, False)],
         "lat double, lon double, expect boolean",
     )
-    pip = point_in_polygon_udf(square)
-    rows = df.select(pip(F.col("lat"), F.col("lon")).alias("got"), "expect").collect()
+    poly = F.array(*[F.struct(F.lit(a).alias("lat"), F.lit(b).alias("lon")) for a, b in square])
+    rows = df.select(
+        point_in_polygon(F.col("lat"), F.col("lon"), poly).alias("got"), "expect"
+    ).collect()
     assert all(r["got"] == r["expect"] for r in rows)
 
 

@@ -9,20 +9,16 @@ import gc
 from pyspark.sql import functions as F
 
 
-def test_externally_held_cut_survives_source_death(spark):
+def test_externally_held_cut_survives_source_death(spark, shielded_rdd_ids):
     """r9 ADVICE #2: the shared-cut finalizer is registered on the CUT
     frame, so a consumer holding the cut past the source's lifetime
     must keep the blocks alive (localCheckpoint has no recompute path)
     — and the blocks must release once the LAST handle drops."""
-    from kg_etl_spark.cutpoint import SHARED_CUT_RDD_IDS, is_shared_cut
     from kg_etl_spark.operators.adjacent import undirected_transition_edges_cut
 
     sc = spark.sparkContext
 
     def build():
-        before = {
-            i for app, i in SHARED_CUT_RDD_IDS if app == sc.applicationId
-        }
         ev = spark.range(1200).select(
             F.col("id").alias("event_id"),
             F.concat(F.lit("t"), (F.col("id") % 3).cast("string")).alias(
@@ -33,14 +29,8 @@ def test_externally_held_cut_survives_source_death(spark):
         )
         cut = undirected_transition_edges_cut(ev)
         cut.count()
-        mine = {
-            i for app, i in SHARED_CUT_RDD_IDS if app == sc.applicationId
-        } - before
-        ids = {
-            int(jid)
-            for jid in sc._jsc.getPersistentRDDs().keys()
-            if int(jid) in mine
-        }
+        mine = {cut._jdf.queryExecution().analyzed().rdd().id()}
+        ids = mine & shielded_rdd_ids()
         return cut, ids  # SOURCE ev dies here; the cut survives
 
     cut, ids = build()
@@ -51,21 +41,20 @@ def test_externally_held_cut_survives_source_death(spark):
         f"blocks of an externally-held cut were released: {ids - live}"
     )
     for i in ids:
-        assert is_shared_cut(sc, i), f"held cut id {i} lost its shield"
+        assert i in shielded_rdd_ids(), f"held cut id {i} lost its shield"
     # the held frame must still be usable (no block-not-found)
     assert cut.count() >= 0
     del cut
     gc.collect()  # last handle gone -> finalizer fires
     for i in ids:
-        assert not is_shared_cut(sc, i), f"dead cut id {i} still shielded"
+        assert i not in shielded_rdd_ids(), f"dead cut id {i} still shielded"
     live = {int(jid) for jid in sc._jsc.getPersistentRDDs().keys()}
     assert not (ids & live), f"dead cut blocks still persisted: {ids & live}"
 
 
 def test_adaptive_dispatch_count_memoized(spark):
     """r9 ADVICE #3: the size-dispatch probe must run at most one
-    count job per source frame — warm calls reuse the weak memo, and a
-    caller-supplied n_docs skips the probe entirely."""
+    count job per source frame — warm calls reuse the weak memo."""
     from kg_etl_spark.operators import dedup as dd
 
     df = spark.createDataFrame(
@@ -81,23 +70,12 @@ def test_adaptive_dispatch_count_memoized(spark):
 
     try:
         type(df).count = counting_count
-        dd.ngram_jaccard_pairs_adaptive(df, "doc_id", threshold=0.5)
+        out = dd.ngram_jaccard_pairs_adaptive(df, "doc_id", threshold=0.5)
         dd.ngram_jaccard_pairs_adaptive(df, "doc_id", threshold=0.5)
         dd.ngram_jaccard_pairs_adaptive(df, "doc_id", threshold=0.5)
     finally:
         type(df).count = real_count
     assert calls["n"] == 1, f"dispatch probe ran {calls['n']} count jobs"
-    assert dd._NDOCS_MEMO.get(df) == 60
-    # explicit n_docs must not touch the probe at all
-    df2 = df.filter(F.col("doc_id") >= 0)
-    try:
-        type(df).count = counting_count
-        out = dd.ngram_jaccard_pairs_adaptive(
-            df2, "doc_id", threshold=0.5, n_docs=60
-        )
-    finally:
-        type(df).count = real_count
-    assert calls["n"] == 1
     assert out.columns == ["a_id", "b_id", "n_common", "jaccard"]
 
 

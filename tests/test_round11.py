@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 # ---------------------------------------------------------------------------
 
 
-def test_derived_frame_only_does_not_pin_cut_blocks(spark):
+def test_derived_frame_only_does_not_pin_cut_blocks(spark, shielded_rdd_ids):
     """Pin the ACTUAL finalizer behavior the reworded docstring states:
     weakref.finalize is registered on the Python cut-frame object, so a
     consumer holding only a DataFrame DERIVED from the cut (which keeps
@@ -29,15 +29,11 @@ def test_derived_frame_only_does_not_pin_cut_blocks(spark):
     collected.  If a future round strengthens the mechanism (e.g.
     ref-tracking derived plans), this test documents that as an
     intentional contract change."""
-    from kg_etl_spark.cutpoint import SHARED_CUT_RDD_IDS, is_shared_cut
     from kg_etl_spark.operators.adjacent import undirected_transition_edges_cut
 
     sc = spark.sparkContext
 
     def build():
-        before = {
-            i for app, i in SHARED_CUT_RDD_IDS if app == sc.applicationId
-        }
         ev = spark.range(900).select(
             F.col("id").alias("event_id"),
             F.concat(F.lit("t"), (F.col("id") % 3).cast("string")).alias(
@@ -48,14 +44,8 @@ def test_derived_frame_only_does_not_pin_cut_blocks(spark):
         )
         cut = undirected_transition_edges_cut(ev)
         cut.count()
-        mine = {
-            i for app, i in SHARED_CUT_RDD_IDS if app == sc.applicationId
-        } - before
-        ids = {
-            int(jid)
-            for jid in sc._jsc.getPersistentRDDs().keys()
-            if int(jid) in mine
-        }
+        mine = {cut._jdf.queryExecution().analyzed().rdd().id()}
+        ids = mine & shielded_rdd_ids()
         derived = cut.groupBy("a").count()  # plan built FROM the cut
         return derived, ids  # source ev AND the cut object die here
 
@@ -63,7 +53,7 @@ def test_derived_frame_only_does_not_pin_cut_blocks(spark):
     assert ids, "shared cut registered no persisted blocks"
     gc.collect()  # source + cut objects gone; only the derived plan is held
     for i in ids:
-        assert not is_shared_cut(sc, i), (
+        assert i not in shielded_rdd_ids(), (
             f"cut id {i} still shielded with only a derived plan held — "
             "the lifecycle contract strengthened; update docstring + test"
         )
@@ -72,6 +62,53 @@ def test_derived_frame_only_does_not_pin_cut_blocks(spark):
         f"cut blocks {ids & live} still persisted with only a derived "
         "plan held — contract strengthened; update docstring + test"
     )
+
+
+def test_concurrent_neighbour_cut_not_shielded_or_released(
+    spark, monkeypatch, shielded_rdd_ids
+):
+    """A shared cut identifies only its OWN checkpointed RDD: an
+    unrelated eager localCheckpoint made while the shared cut
+    materializes (what a second client thread does) must not be
+    shielded from the between-query flush, and must keep its blocks —
+    and stay readable — when the shared cut dies."""
+    from kg_etl_spark import cutpoint
+    from kg_etl_spark.operators.adjacent import undirected_transition_edges_cut
+
+    sc = spark.sparkContext
+    real_cut = cutpoint.lineage_cut
+    held = {}
+
+    def racing_cut(df, eager=True):
+        held["neighbour"] = spark.range(700).localCheckpoint(eager=True)
+        return real_cut(df, eager)
+
+    monkeypatch.setattr(cutpoint, "lineage_cut", racing_cut)
+
+    def build():
+        ev = spark.range(800).select(
+            F.col("id").alias("event_id"),
+            F.concat(F.lit("t"), (F.col("id") % 3).cast("string")).alias(
+                "event_type"
+            ),
+            (F.col("id") * 37 % 101).alias("user_id"),
+            F.timestamp_seconds(F.col("id") * 7 % 99_991).alias("ts"),
+        )
+        cut = undirected_transition_edges_cut(ev)
+        cut.count()
+        return cut
+
+    cut = build()
+    monkeypatch.undo()
+    neighbour = held.pop("neighbour")
+    nb_id = neighbour._jdf.queryExecution().analyzed().rdd().id()
+    assert nb_id in {int(j) for j in sc._jsc.getPersistentRDDs().keys()}
+    assert nb_id not in shielded_rdd_ids(), "neighbour registered as shared"
+    del cut
+    gc.collect()  # the shared cut dies -> its finalizer fires
+    live = {int(jid) for jid in sc._jsc.getPersistentRDDs().keys()}
+    assert nb_id in live, "the shared cut's finalizer released the neighbour"
+    assert neighbour.count() == 700
 
 
 # ---------------------------------------------------------------------------

@@ -355,13 +355,13 @@ def test_rankdev_stats_memoized_no_second_jobs(spark):
 # ---- memoized shared edge cut + flush protection -------------------------
 
 
-def test_shared_edge_cut_memoized_and_flush_safe(spark):
+def test_shared_edge_cut_memoized_and_flush_safe(spark, shielded_rdd_ids):
     # the transition-edge frame is a deterministic pure function of the
     # event frame and ~20 graph queries consume it: it must build ONCE
     # per (session, frame) and its localCheckpoint blocks must survive
     # a bench-style inter-query block flush (evicting a truncated-
     # lineage checkpoint makes the frame unrecomputable)
-    from kg_etl_spark.cutpoint import SHARED_CUT_RDD_IDS, is_shared_cut
+    from kg_etl_spark.cutpoint import is_shared_cut
     from kg_etl_spark.operators.adjacent import undirected_transition_edges_cut
 
     ev = spark.range(2000).select(
@@ -374,14 +374,15 @@ def test_shared_edge_cut_memoized_and_flush_safe(spark):
     n1 = e1.count()
     assert undirected_transition_edges_cut(ev) is e1, "cut not memoized"
     sc = spark.sparkContext
-    assert any(
-        app == sc.applicationId for app, _ in SHARED_CUT_RDD_IDS
-    ), "shared cut registered no block ids for this context"
+    cut_id = e1._jdf.queryExecution().analyzed().rdd().id()
+    assert cut_id in shielded_rdd_ids(), (
+        "shared cut registered no block ids for this context"
+    )
     # bench.py's _drop_query_state contract: flush everything EXCEPT
-    # the shared ids, then the shared frame must still be readable
+    # the shared cuts, then the shared frame must still be readable
     jmap = sc._jsc.getPersistentRDDs()
     for jid, jrdd in jmap.items():
-        if not is_shared_cut(sc, int(jid)):
+        if not is_shared_cut(jrdd):
             jrdd.unpersist(False)
     assert e1.count() == n1
 

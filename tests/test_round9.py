@@ -291,26 +291,22 @@ def test_ngram_pairs_adaptive_both_branches_identical(spark, monkeypatch):
     assert plain and plain == pref
 
 
-def test_shared_cut_released_when_source_dies(spark):
-    # r8 verdict directive #4: the shared-cut registry must not grow
-    # monotonically — when the SOURCE frame dies (weak memo entry
-    # gone), the cut's flush-protected blocks must be unregistered and
-    # unpersisted so a long-lived session's executor storage is
-    # bounded by the LIVE shared frames, not the historical ones
+def test_shared_cut_released_when_source_dies(spark, shielded_rdd_ids):
+    # r8 verdict directive #4: shared cuts must not accumulate — when
+    # the SOURCE frame dies (weak memo entry gone), the cut's
+    # flush-protected blocks must be unpersisted so a long-lived
+    # session's executor storage is bounded by the LIVE shared frames,
+    # not the historical ones
     import gc
 
-    from kg_etl_spark.cutpoint import SHARED_CUT_RDD_IDS, is_shared_cut
     from kg_etl_spark.operators.adjacent import undirected_transition_edges_cut
 
     sc = spark.sparkContext
 
     def build():
-        # diff the registry around THIS build: a full suite run has
-        # other tests' shared cuts registered whose sources are still
-        # alive (the session read memo holds them) — those must stay
-        before = {
-            i for app, i in SHARED_CUT_RDD_IDS if app == sc.applicationId
-        }
+        # read the cut's id from its own plan: a full suite run has
+        # other tests' shared cuts alive (the session read memo holds
+        # their sources) — those must stay
         ev = spark.range(1500).select(
             F.col("id").alias("event_id"),
             F.concat(F.lit("t"), (F.col("id") % 3).cast("string")).alias(
@@ -321,19 +317,13 @@ def test_shared_cut_released_when_source_dies(spark):
         )
         cut = undirected_transition_edges_cut(ev)
         cut.count()
-        mine = {
-            i for app, i in SHARED_CUT_RDD_IDS if app == sc.applicationId
-        } - before
-        return {
-            int(jid)
-            for jid in sc._jsc.getPersistentRDDs().keys()
-            if int(jid) in mine
-        }
+        mine = {cut._jdf.queryExecution().analyzed().rdd().id()}
+        return mine & shielded_rdd_ids()
 
     ids = build()  # ev + cut go out of scope on return
     assert ids, "shared cut registered no persisted blocks"
     gc.collect()  # drop the dead frames -> finalizer fires
     for i in ids:
-        assert not is_shared_cut(sc, i), f"dead cut id {i} still shielded"
+        assert i not in shielded_rdd_ids(), f"dead cut id {i} still shielded"
     live = {int(jid) for jid in sc._jsc.getPersistentRDDs().keys()}
     assert not (ids & live), f"dead cut blocks still persisted: {ids & live}"
