@@ -33,13 +33,14 @@ Group keys may be NULL (null-safe carry joins keep a NULL group
 window-equivalent); ``order_col`` must be non-null and (order,
 tiebreaks) a total order per group for a deterministic successor.
 
-Sizing (round 7): ``num_ranges`` defaults to
-clamp(ceil(n / 1M), 64, 4×shuffle-width) from the row count the
-memoized bounds aggregate returns for free, and a bursty order-key
-distribution (a straggler's worth of rows collapsing into one
-equal-width cell) switches to equi-depth boundaries from one memoized
-percentile-sketch pass — boundary placement is correctness-neutral
-because any monotone bucketing preserves the per-group total order.
+Sizing: ``num_ranges`` defaults to clamp(ceil(n / 1M), 64,
+4×shuffle-width) from the row count the memoized bounds aggregate
+returns for free, and the cells come from the range devices' one
+bucketing policy, ``rankdev._cell_plan``: equal-width ranges, an
+equi-depth re-split when a straggler's worth of rows collapses into one
+(group, range) cell, and a tiebreak sub-split of a dominant tie —
+placement is correctness-neutral because any monotone bucketing
+preserves the per-group total order.
 
 Degenerate guard: a constant order key lands every row in range 0 and
 the device degrades to the single window it replaces (the event
@@ -60,114 +61,20 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from kg_etl_spark.operators.rankdev import (
-    SKEW_CELL_ROWS,
     _auto_num_ranges,
-    _boundary_expr,
-    _cell_threshold,
-    _dup_boundaries,
-    _equidepth_boundaries,
-    _memo,
+    _cell_plan,
     _memo_get,
-    _range_expr,
     _stats,
-    _tie_cell_expr,
-    _tie_stats,
-    _tiebreak_chain,
 )
 
-# The per-(frame, column) statistics memo lives in rankdev (shared by
-# both device families since r8 — the programmatic stand-in for
-# zone-map/column statistics a table format serves at scan time):
-# count/min/max, straggler probes, equi-depth boundaries, and
-# heavy-tie stats of an immutable column are dataset constants,
-# computed once per session. Weak-keyed: frames die, entries follow;
-# callers that mutate an sf_dir mid-session already must clear the
-# read memo (session.clear_read_memo), which drops the memoized frame
-# and with it these entries. Wrong stats could only skew CELL SIZES,
-# never results (any monotone bucketing preserves the total order).
-
-
-def _order_stats(df: DataFrame, order_col: str):
-    """(n, lo, hi) of the order key — ONE memoized aggregate (the row
-    count rides the bounds scan for free and drives auto sizing)."""
-    n, lo, hi = _stats(df, order_col)
-    return None if lo is None else (n, lo, hi)
-
-
-def _cell_expr(df: DataFrame, order_col: str, n: int, lo: float, hi: float,
-               num_ranges: int, tiebreaks: Sequence[str] = ()):
-    """Range-cell id for the order key: the zero-cost equal-width
-    arithmetic when no width cell could be a straggler sort; memoized
-    equi-depth boundaries when the value distribution is bursty enough
-    to collapse a straggler's worth of rows into one width cell; and —
-    when a straggler cell has collapsed to a SINGLE order value, which
-    no monotone bucketing can split — a tiebreak sub-bucketing of that
-    heavy tie (rankdev._tie_cell_expr: intra-tie order IS the tiebreak
-    order, so the composite id stays jointly monotone).  Every
-    bucketing preserves cell concatenation order == stream order, so
-    the device result is bit-identical regardless of placement.
-
-    Detection above the straggler threshold, cheapest first: a
-    per-width-cell COUNT+MIN+MAX (map-side combinable hash agg to
-    ≤num_ranges rows, only stragglers collected — measured ~1-3s at
-    50M vs ~8s for a full-corpus sketch) decides whether the
-    percentile-sketch pass is needed at all AND whether a straggler is
-    a pure tie (min==max), in which case the useless sketch is skipped
-    entirely; the sketch itself reads a bounded ~2M-row sample above
-    that size (rankdev.SKETCH_SAMPLE_ROWS — placement-neutral, ~2.1s
-    at 50M and flat in n).  All statistics memoize per
-    (frame, column) — once per session for the static scans."""
-    kd = F.col(order_col).cast("double")
-    if n <= SKEW_CELL_ROWS or hi == lo:
-        return _range_expr(kd, lo, hi, num_ranges)
-    memo = _memo(df)
-    thr = _cell_threshold(n, num_ranges)
-
-    def stragglers(expr, tag):
-        pkey = (tag, order_col, num_ranges)
-        if pkey not in memo:
-            rows = (
-                df.groupBy(expr.alias("_c"))
-                .agg(
-                    F.count(F.lit(1)).alias("_n"),
-                    F.min(kd).alias("_mn"),
-                    F.max(kd).alias("_mx"),
-                )
-                .filter(F.col("_n") > thr)
-                .collect()
-            )
-            memo[pkey] = [
-                (int(r["_n"]), float(r["_mn"]), float(r["_mx"])) for r in rows
-            ]
-        return memo[pkey]
-
-    base, B = _range_expr(kd, lo, hi, num_ranges), num_ranges
-    strag = stragglers(base, "cellstrag")
-    if not strag:
-        return base
-    vals = {mn for _n, mn, mx in strag if mn == mx}
-    if any(mn < mx for _n, mn, mx in strag):
-        bkey = ("bnd", order_col, num_ranges)
-        if bkey not in memo:
-            memo[bkey] = _equidepth_boundaries(df, order_col, num_ranges, n)
-        bnds = memo[bkey]
-        base, B = _boundary_expr(kd, bnds), len(bnds) + 1
-        strag = stragglers(base, "eqstrag")
-        # boundary duplication flags heavy values whose cell also
-        # holds neighbors (min<max hides the tie); _tie_stats drops
-        # the sub-threshold ones
-        vals |= _dup_boundaries(bnds)
-        vals |= {mn for _n, mn, mx in strag if mn == mx}
-    chain = _tiebreak_chain(df, [t for t in tiebreaks if t != order_col])
-    if vals and chain:
-        # full-chain memo key: same first tiebreak but different chain
-        # depth must not collide on one cascade plan (r8 ADVICE, low)
-        hkey = ("heavy", order_col, num_ranges, tuple(n for n, _ in chain))
-        if hkey not in memo:
-            memo[hkey] = _tie_stats(df, kd, sorted(vals), chain, df.sparkSession, thr)
-        if memo[hkey]:
-            return _tie_cell_expr(kd, base, B, memo[hkey])
-    return base
+# The per-frame statistics memo lives in rankdev: the bounds aggregate
+# and the cell plan (``rankdev._cell_plan`` — straggler probes,
+# equi-depth boundaries, heavy-tie stats) of an immutable column are
+# dataset constants, computed once per session, as are the edge cuts
+# below. Weak-keyed: frames die, entries follow; callers that mutate an
+# sf_dir mid-session already must clear the read memo
+# (session.clear_read_memo), which drops the memoized frame and with it
+# these entries. Wrong stats could only skew CELL SIZES, never results.
 
 
 def with_next(
@@ -188,7 +95,7 @@ def with_next(
 
     ``num_ranges=None`` (default) sizes itself from the memoized row
     count (clamp(ceil(n/1M), 64, 4×shuffle-width)); bursty order-key
-    distributions switch to equi-depth cells (:func:`_cell_expr`).
+    distributions switch to equi-depth cells (``rankdev._cell_plan``).
     Group keys may be NULL (the carry join is null-safe, so a NULL
     group is its own stream exactly as the plain window treats it —
     r6 advice); ``order_col`` must be non-null."""
@@ -197,19 +104,21 @@ def with_next(
     next_cols = list(next_cols)
     out_types = {c: df.schema[c].dataType for c in next_cols}
 
-    stats = _order_stats(df, order_col)
-    if stats is None:  # empty frame
+    n, lo, hi = _stats(df, order_col)
+    if lo is None:  # empty frame
         out = df
         for c in next_cols:
             out = out.withColumn(prefix + c, F.lit(None).cast(out_types[c]))
         return out
-    n, lo, hi = stats
     if num_ranges is None:
         num_ranges = _auto_num_ranges(n, df.sparkSession)
 
     # cast-to-double is monotone non-decreasing, so even a rounding
     # collision only MERGES adjacent keys into one cell — never reorders
-    ranged = df.withColumn("_apr", _cell_expr(df, order_col, n, lo, hi, num_ranges, tiebreaks))
+    plan = _cell_plan(
+        df, order_col, n, lo, hi, num_ranges, groups=group_cols, tiebreaks=tiebreaks
+    )
+    ranged = df.withColumn("_apr", plan["cell"])
     # group keys wrapped in 1-field structs (r6 advice): struct equality
     # treats a null FIELD as equal, so a NULL group is its own stream
     # through the partitioning, the aggregate AND the carry join —
@@ -374,15 +283,15 @@ def with_prefix_max(
     skew handling, and NULL-group handling as :func:`with_next`."""
     group_cols = list(group_cols)
     tiebreaks = [t for t in tiebreaks if t != order_col]
-    stats = _order_stats(df, order_col)
-    if stats is None:
+    n, lo, hi = _stats(df, order_col)
+    if lo is None:
         return df.withColumn(out_col, F.lit(None).cast(df.schema[value_col].dataType))
-    n, lo, hi = stats
     if num_ranges is None:
         num_ranges = _auto_num_ranges(n, df.sparkSession)
-    ranged = df.withColumn(
-        "_apr", _cell_expr(df, order_col, n, lo, hi, num_ranges, tiebreaks)
+    plan = _cell_plan(
+        df, order_col, n, lo, hi, num_ranges, groups=group_cols, tiebreaks=tiebreaks
     )
+    ranged = df.withColumn("_apr", plan["cell"])
     # 1-field struct group keys: null-safe partitioning/join without
     # de-attributing the join condition (see the with_next note)
     gkeys = [f"_apg{i}" for i in range(len(group_cols))]

@@ -560,75 +560,34 @@ def quantile_normalize(
 
     Each row's percent-rank within its group (pr = (r−1)/(n_g−1),
     total-ordered by (value, id)) indexes into the globally sorted
-    values at position round(pr·(N−1))+1. The global rank NEVER runs as
-    a single-partition window: the value space splits into fixed-width
-    ranges, each range ranks locally (parallel windows), and a
-    driver-side prefix over the per-range COUNTS (num_ranges rows)
-    shifts the local ranks global — the pack_concat_chunk prefix-sum
-    device, keyed by value instead of id. Per-group ranks are ordinary
-    partitioned windows (groups parallelize). Sized and skew-guarded
-    like rankdev (r7): num_ranges defaults to
-    clamp(ceil(n/1M), 64, 4×shuffle-width) and a straggler-sized width
-    cell (detected from the counts the device already collects)
-    triggers an equi-depth re-split — both bucketings are monotone, so
-    results are bit-identical.
+    values at position round(pr·(N−1))+1. The global rank is
+    rankdev.global_row_number over (value, id) — range cells ranked in
+    parallel and shifted by per-cell offsets, never a single-partition
+    window, with the range devices' sizing and skew handling (sampled
+    equi-depth re-split, heavy-tie split on the id); every bucketing is
+    monotone, so results are bit-identical. Per-group ranks are
+    ordinary partitioned windows (groups parallelize).
 
     Output: (id, group, value, pr, norm_value), all float steps
     integer-derived and rounded at the edge — oracle-exact.
     """
+    from kg_etl_spark.operators.rankdev import global_row_number
+
     v, g, i = F.col(value_col), F.col(group_col), F.col(id_col)
     base = df.select(
         i.alias("_id"), g.alias("_g"), v.cast("double").alias("_v")
     ).filter(F.col("_v").isNotNull())
 
-    n_total = base.count()
+    ranked, n_total = global_row_number(
+        base, "_v", tiebreaks=["_id"], out_col="_grn", num_ranges=num_ranges
+    )
     if n_total == 0:
         return base.select(
             F.col("_id").alias(id_col), F.col("_g").alias(group_col),
             F.col("_v").alias(value_col),
             F.lit(0.0).alias("pr"), F.lit(0.0).alias("norm_value"),
         )
-    from kg_etl_spark.operators.rankdev import (
-        _auto_num_ranges,
-        _boundary_expr,
-        _equidepth_boundaries,
-        _is_straggler,
-        _range_expr,
-    )
-
-    if num_ranges is None:
-        num_ranges = _auto_num_ranges(n_total, df.sparkSession)
-    bounds = base.agg(F.min("_v").alias("lo"), F.max("_v").alias("hi")).collect()[0]
-    lo, hi = float(bounds["lo"]), float(bounds["hi"])
-    ranged = base.withColumn("_r", _range_expr(F.col("_v"), lo, hi, num_ranges))
-    counts = sorted(
-        ranged.groupBy("_r").agg(F.count(F.lit(1)).alias("_n")).collect(),
-        key=lambda r: r["_r"],
-    )
-    if counts and _is_straggler(max(r["_n"] for r in counts), n_total, num_ranges):
-        ranged = base.withColumn(
-            "_r", _boundary_expr(F.col("_v"), _equidepth_boundaries(base, "_v", num_ranges))
-        )
-        counts = sorted(
-            ranged.groupBy("_r").agg(F.count(F.lit(1)).alias("_n")).collect(),
-            key=lambda r: r["_r"],
-        )
-    w_local = Window.partitionBy("_r").orderBy(F.col("_v").asc(), F.col("_id").asc())
-    local = ranged.withColumn("_lrn", F.row_number().over(w_local))
-    offsets, running = {}, 0
-    for r in counts:
-        offsets[r["_r"]] = running
-        running += r["_n"]
-    from kg_etl_spark.operators.rankdev import _shift_columns
-
-    # inline array lookup below the threshold; broadcast offsets join
-    # above it (the array literal is a plan-size hazard at cluster
-    # shuffle widths — shared device policy, rankdev._shift_columns)
-    glob = (
-        _shift_columns(local, "_r", num_ranges, {"_grn": (F.col("_lrn"), offsets)})
-        .select("_grn", F.col("_v").alias("_gv"))
-        .lineage_cut(eager=True)
-    )
+    glob = ranked.select("_grn", F.col("_v").alias("_gv")).lineage_cut(eager=True)
 
     w_grp = Window.partitionBy("_g").orderBy(F.col("_v").asc(), F.col("_id").asc())
     n_grp = Window.partitionBy("_g")

@@ -3,41 +3,42 @@
 Spark's ``Window.orderBy(...)`` with no ``partitionBy`` moves the whole
 frame to ONE task ("No Partition Defined for Window operation"), which is
 the canonical 100-TB scale-killer.  This module provides the exact
-replacement used across the catalog (the `quantile_normalize` /
-`pack_concat_chunk` pattern, operators/datapipe.py:530,
-operators/packing.py:83), generalized:
+replacement used across the catalog — the range devices
+(:func:`global_row_number`, :func:`grouped_row_number`,
+:func:`global_cumsum`, and the stream devices in
+operators/adjacent.py):
 
-1. the numeric sort key is bucketed into ``num_ranges`` value ranges
-   (a map-side expression — every row with an equal key lands in the
-   same range, so range order == key order).  ``num_ranges`` is sized
-   from the row count (free in the bounds aggregate):
-   clamp(ceil(n/1M), 64, 4×shuffle-width); ranges are equal-WIDTH by
-   default, switching to equi-depth boundaries (one percentile-sketch
-   pass) when a straggler's worth of rows collapses into one width
-   cell — boundary placement is correctness-neutral because any
-   monotone bucketing preserves the total order.  A straggler cell
-   that has collapsed to a SINGLE key value (a dominant tie, which no
-   monotone bucketing can split) is sub-bucketed by EQUI-DEPTH
-   boundaries of the FIRST tiebreak instead (:func:`_tie_cell_expr`;
-   numeric, timestamp, or string via a 6-byte binary-prefix integer;
-   bucketing must START at the first tiebreak to be order-safe, and
-   cascades to the next one only for values whose earlier tiebreaks
-   are constant inside the tie — :func:`_tiebreak_chain`,
-   :func:`_tie_stats`) — intra-tie order IS the tiebreak order, so
-   the composite id stays jointly monotone and results stay
-   bit-identical;
-2. each range ranks/cumsums LOCALLY with an ordinary partitioned window
-   (``num_ranges`` parallel sorts instead of one global sort);
-3. the per-range row counts (or partial sums) — ``num_ranges`` rows, a
-   model-sized frame — come to the driver once, a running prefix turns
-   them into per-range OFFSETS, and either a dense array literal (O(1)
-   indexed lookup per row, below :data:`OFFSET_INLINE_MAX` ids) or ONE
-   broadcast join on the cell id (above it — an array literal at
-   cluster shuffle widths is a plan/codegen hazard) shifts every local
-   rank/cumsum to its exact global value.
+1. the numeric sort key is bucketed into value-range CELLS (a map-side
+   expression — every row with an equal key lands in the same cell, so
+   cell order == key order).  Which cells, is decided in ONE place,
+   :func:`_cell_plan`: ``num_ranges`` is sized from the row count (free
+   in the bounds aggregate): clamp(ceil(n/1M), 64, 4×shuffle-width);
+   cells are equal-WIDTH by default, switching to equi-depth boundaries
+   (one percentile-sketch pass) when a straggler's worth of rows
+   collapses into one width cell — boundary placement is
+   correctness-neutral because any monotone bucketing preserves the
+   total order.  A straggler cell that has collapsed to a SINGLE key
+   value (a dominant tie, which no monotone bucketing can split) is
+   sub-bucketed by EQUI-DEPTH boundaries of the FIRST tiebreak instead
+   (:func:`_tie_cell_expr`; numeric, timestamp, or string via a 6-byte
+   binary-prefix integer; bucketing must START at the first tiebreak to
+   be order-safe, and cascades to the next one only for values whose
+   earlier tiebreaks are constant inside the tie —
+   :func:`_tiebreak_chain`, :func:`_tie_stats`) — intra-tie order IS
+   the tiebreak order, so the composite id stays jointly monotone and
+   results stay bit-identical;
+2. each cell ranks/cumsums LOCALLY with an ordinary partitioned window
+   (one parallel sort per cell instead of one global sort);
+3. the per-cell row counts (or partial sums) — a model-sized frame —
+   come to the driver once, a running prefix turns them into per-cell
+   OFFSETS, and either a dense array literal (O(1) indexed lookup per
+   row, below :data:`OFFSET_INLINE_MAX` ids) or ONE broadcast join on
+   the cell id (above it — an array literal at cluster shuffle widths
+   is a plan/codegen hazard) shifts every local rank/cumsum to its
+   exact global value.
 
-Cost at any scale: one extra min/max aggregate + one ``num_ranges``-row
-collect — both memoized per (frame, column), so repeat devices over the
+Cost at any scale: one extra min/max aggregate + one per-cell collect
+— both memoized per (frame, column), so repeat devices over the
 same scan schedule no statistics jobs at all; the data itself shuffles
 once (hash by range) and never concentrates.  Exactness: ranks are
 integer-derived, so results are bit-identical to the single-partition
@@ -66,8 +67,8 @@ from pyspark.sql import functions as F
 # for the zone-map/column statistics a table format (Delta/Iceberg)
 # serves for free at scan time.  The catalog's inputs are memoized
 # static scans (session.read_table), so count/min/max of an immutable
-# column, the straggler count-probe, the equi-depth boundaries, and
-# the heavy-tie stats are dataset constants: computing them once per
+# column and its cell plan (:func:`_cell_plan`: probes, equi-depth
+# boundaries, heavy-tie stats) are dataset constants: computing them once per
 # session per (frame, column) instead of once per device call removes
 # the stats jobs from every repeat invocation (r7 verdict directive
 # #3 — previously only the adjacent family memoized; rankdev re-paid
@@ -278,17 +279,11 @@ def _boundary_expr(key: Column, bnds) -> Column:
     )
 
 
-def _is_straggler(max_cell: int, n: int, num_ranges: int) -> bool:
-    """True when one cell would be a straggler SORT task at scale: bigger
-    than BOTH the absolute trigger and 4× the even share. Small inputs
-    never re-split — imbalance without absolute size is harmless and
-    the extra sketch pass is not free."""
-    return max_cell > SKEW_CELL_ROWS and max_cell > 4 * (n // max(num_ranges, 1))
-
-
 def _cell_threshold(n: int, num_ranges: int) -> int:
-    """Per-cell straggler bar — :func:`_is_straggler` applied to one
-    cell: a cell is a straggler iff its row count exceeds this."""
+    """Per-cell straggler bar: a cell is a straggler SORT task at scale
+    iff its row count exceeds BOTH the absolute trigger and 4× the even
+    share. Small inputs never re-split — imbalance without absolute
+    size is harmless and the extra sketch pass is not free."""
     return max(SKEW_CELL_ROWS, 4 * (n // max(num_ranges, 1)))
 
 
@@ -353,15 +348,6 @@ def _tiebreak_chain(
             break
         chain.append((t, e))
     return chain
-
-
-def _tiebreak_key(
-    df: DataFrame, tiebreaks: Sequence[str]
-) -> Optional[Tuple[str, Column]]:
-    """First link of :func:`_tiebreak_chain` (compatibility helper for
-    tests and single-level callers)."""
-    chain = _tiebreak_chain(df, tiebreaks)
-    return chain[0] if chain else None
 
 
 def _dup_boundaries(bnds) -> set:
@@ -557,11 +543,14 @@ def _tie_cell_expr(kd: Column, base_expr: Column, B: int, heavies) -> Column:
 
 def _cell_order(blocks, ascending: bool):
     """Cell-id sort key in TRAVERSAL order for the offset accumulation:
-    ascending key -> plain id order; DESC key -> blocks reversed, ids
-    descending within range segments but still ASCENDING within tie
-    blocks (tiebreaks sort ascending under either key direction)."""
-    if ascending or blocks is None:
+    ascending key -> plain id order; DESC key -> descending ids, or with
+    tie ``blocks`` the blocks reversed, ids descending within range
+    segments but still ASCENDING within tie blocks (tiebreaks sort
+    ascending under either key direction)."""
+    if ascending:
         return lambda cid: cid
+    if blocks is None:
+        return lambda cid: -cid
 
     def key(cid):
         for bi, (kind, start, ln) in enumerate(blocks):
@@ -571,6 +560,115 @@ def _cell_order(blocks, ascending: bool):
         raise AssertionError(f"cell id {cid} outside the tie layout")
 
     return key
+
+
+def _cell_plan(
+    df: DataFrame,
+    key: str,
+    n: int,
+    lo: float,
+    hi: float,
+    num_ranges: int,
+    *,
+    groups: Sequence[str] = (),
+    tiebreaks: Sequence[str] = (),
+    totals: Optional[Sequence[str]] = None,
+) -> dict:
+    """The cells of a range device — the ONE place the bucketing policy
+    lives:
+
+    1. equal-WIDTH ranges of ``key`` over [lo, hi];
+    2. a straggler cell (above :func:`_cell_threshold`) holding more
+       than one key value re-splits the key on equi-depth boundaries
+       (:func:`_equidepth_boundaries`, sampled sketch above
+       :data:`SKETCH_SAMPLE_ROWS`) — skipped when every straggler is a
+       pure tie, which the sketch cannot help;
+    3. a straggler holding ONE tied value — or a value the boundaries
+       duplicate (:func:`_dup_boundaries`: its cell also holds
+       neighbors, so min<max hides the tie) — sub-splits on the
+       tiebreak chain (:func:`_tie_stats`, :func:`_tie_cell_expr`).
+
+    Stragglers are counted per (``groups``…, cell): that is what a
+    grouped device sorts in one task.  One probe aggregate over
+    (groups…, cell) yields count/min/max and, when the caller asks for
+    ``totals`` (``()`` = counts only; column names = also their per-cell
+    SUMs), the per-cell rows the offsets are built from.  Without
+    ``totals`` only straggler rows come to the driver, and below the
+    straggler bar (n ≤ :data:`SKEW_CELL_ROWS`, or a constant key) the
+    width cells return with no job at all.
+
+    Returns ``{"cell": id expression, "bnds", "heavies", "blocks",
+    "size"}`` (``blocks``: the :func:`_tie_layout` when a tie split,
+    else None; ``size``: the id-space size) plus, with ``totals``,
+    ``"counts": {cell: rows}`` and ``"sums": [{cell: sum}]`` per total
+    column — from the last probe when the bucketing did not change,
+    else from one more probe of the final cells.  Memoized per frame
+    under ``("cells", key, groups, tiebreak chain, num_ranges,
+    totals)``: the whole eligible chain is in the key, so two calls
+    sharing the first tiebreak but differing in depth never reuse each
+    other's cascade plan.  Every bucketing is monotone in (key,
+    tiebreak-at-tie), so the plan moves cell sizes, never results."""
+    kd = F.col(key).cast("double")
+    width = _range_expr(kd, lo, hi, num_ranges)
+    if totals is None and (n <= SKEW_CELL_ROWS or hi == lo):
+        return {
+            "cell": width, "bnds": None, "heavies": [], "blocks": None,
+            "size": num_ranges,
+        }
+    chain = _tiebreak_chain(df, [t for t in tiebreaks if t != key])
+    sums = list(totals or ())
+    thr = _cell_threshold(n, num_ranges)
+
+    def probe(expr):
+        q = df.groupBy(*groups, expr.alias("_cell")).agg(
+            F.count(F.lit(1)).alias("_n"),
+            F.min(kd).alias("_mn"),
+            F.max(kd).alias("_mx"),
+            *[F.sum(c).alias(f"_s{i}") for i, c in enumerate(sums)],
+        )
+        return (q if totals is not None else q.filter(F.col("_n") > thr)).collect()
+
+    def stragglers(rows):  # an all-NULL-key cell has nothing to split
+        return [r for r in rows if r["_n"] > thr and r["_mn"] is not None]
+
+    def build():
+        bnds, base, B = None, width, num_ranges
+        rows = probe(base)
+        strag = stragglers(rows)
+        heavies = []
+        if strag:
+            vals = {float(r["_mn"]) for r in strag if r["_mn"] == r["_mx"]}
+            if any(r["_mn"] < r["_mx"] for r in strag):
+                bnds = _equidepth_boundaries(df, key, num_ranges, n)
+                base, B = _boundary_expr(kd, bnds), len(bnds) + 1
+                rows = probe(base)
+                strag = stragglers(rows)
+                vals |= _dup_boundaries(bnds)
+                vals |= {float(r["_mn"]) for r in strag if r["_mn"] == r["_mx"]}
+            if vals and chain:
+                heavies = _tie_stats(df, kd, sorted(vals), chain, df.sparkSession, thr)
+        plan = {
+            "cell": base, "bnds": bnds, "heavies": heavies, "blocks": None,
+            "size": B,
+        }
+        if heavies:
+            plan["blocks"], plan["size"] = _tie_layout(B, heavies)
+            plan["cell"] = _tie_cell_expr(kd, base, B, heavies)
+            if totals is not None:
+                rows = probe(plan["cell"])
+        if totals is not None:
+            plan["counts"] = {int(r["_cell"]): int(r["_n"]) for r in rows}
+            plan["sums"] = [
+                {int(r["_cell"]): r[f"_s{i}"] for r in rows} for i in range(len(sums))
+            ]
+        return plan
+
+    tb = tuple(name for name, _ in chain)
+    memo_key = (
+        "cells", key, tuple(groups), tb, num_ranges,
+        None if totals is None else tuple(sums),
+    )
+    return _memo_get(df, memo_key, build)
 
 
 def _offset_lookup(offsets: dict, size: int, idx: Column) -> Column:
@@ -672,8 +770,8 @@ def global_row_number(
     SINGLE key value (a dominant tie, which no monotone bucketing can
     split) is sub-bucketed by the first tiebreak's value range
     instead (:func:`_tie_cell_expr`) — intra-tie order IS the tiebreak
-    order, so either way ranks stay bit-identical.  All statistics
-    (bounds, probes, boundaries, tie stats, final counts) memoize per
+    order, so either way ranks stay bit-identical.  The cells and final
+    counts come from :func:`_cell_plan`; all statistics memoize per
     (frame, column) — once per session for the static scans.
 
     NULL keys rank FIRST under ASC and LAST under DESC, exactly like
@@ -692,84 +790,15 @@ def global_row_number(
         num_ranges = _auto_num_ranges(n_total, df.sparkSession)
     bucket_key = key
     if hi == lo and subkey is not None:
-        _, lo2, hi2 = _stats(df, subkey)
-        lo, hi, bucket_key = lo2, hi2, subkey
-    kd = F.col(bucket_key).cast("double")
-    chain = (
-        _tiebreak_chain(df, [t for t in tiebreaks if t != bucket_key])
-        if bucket_key == key
-        else []  # subkey fallback: near-unique, never tie-dominated
+        _, lo, hi = _stats(df, subkey)
+        bucket_key = subkey
+    plan = _cell_plan(
+        df, bucket_key, n_total, lo, hi, num_ranges,
+        # subkey fallback: near-unique, never tie-dominated
+        tiebreaks=tiebreaks if bucket_key == key else (),
+        totals=(),
     )
-    # memo key carries the WHOLE eligible chain: two calls sharing the
-    # first tiebreak but differing in depth must not reuse each
-    # other's cascade plan (r8 ADVICE, low)
-    tb = tuple(name for name, _ in chain)
-
-    def build_plan():
-        def cells(expr):
-            return (
-                df.groupBy(expr.alias("_rdrng"))
-                .agg(
-                    F.count(F.lit(1)).alias("_n"),
-                    F.min(kd).alias("_mn"),
-                    F.max(kd).alias("_mx"),
-                )
-                .collect()
-            )
-
-        bnds, B = None, num_ranges
-        rows = cells(_range_expr(F.col(bucket_key), lo, hi, num_ranges))
-        thr = _cell_threshold(n_total, num_ranges)
-        strag = [r for r in rows if r["_n"] > thr]
-        heavies = []
-        if strag:
-            vals = {float(r["_mn"]) for r in strag if r["_mn"] == r["_mx"]}
-            if any(r["_mn"] < r["_mx"] for r in strag):
-                # value skew across distinct keys: one equi-depth
-                # re-split (skipped when every straggler is a pure
-                # tie, which the sketch cannot help — r7 advice);
-                # boundary duplication flags heavy values whose cell
-                # also holds neighbors (min<max hides the tie)
-                bnds = _equidepth_boundaries(df, bucket_key, num_ranges, n_total)
-                B = len(bnds) + 1
-                rows = cells(_boundary_expr(F.col(bucket_key), bnds))
-                strag = [r for r in rows if r["_n"] > thr]
-                vals |= _dup_boundaries(bnds)
-                vals |= {float(r["_mn"]) for r in strag if r["_mn"] == r["_mx"]}
-            if vals and chain:
-                heavies = _tie_stats(
-                    df, kd, sorted(vals), chain, df.sparkSession, thr
-                )
-        blocks, size = None, B
-        if heavies:
-            blocks, size = _tie_layout(B, heavies)
-            base = (
-                _range_expr(F.col(bucket_key), lo, hi, num_ranges)
-                if bnds is None
-                else _boundary_expr(F.col(bucket_key), bnds)
-            )
-            rows = cells(_tie_cell_expr(kd, base, B, heavies))
-        return {
-            "bnds": bnds,
-            "B": B,
-            "heavies": heavies,
-            "blocks": blocks,
-            "size": size,
-            "counts": {int(r["_rdrng"]): int(r["_n"]) for r in rows},
-        }
-
-    plan = _memo_get(df, ("grn_plan", bucket_key, tb, num_ranges), build_plan)
-    base = (
-        _range_expr(F.col(bucket_key), lo, hi, num_ranges)
-        if plan["bnds"] is None
-        else _boundary_expr(F.col(bucket_key), plan["bnds"])
-    )
-    cell = (
-        _tie_cell_expr(kd, base, plan["B"], plan["heavies"])
-        if plan["heavies"]
-        else base
-    )
-    ranged = df.withColumn("_rdrng", cell)
+    ranged = df.withColumn("_rdrng", plan["cell"])
 
     # Cell ids ascend with the key; for a DESC sort the offsets
     # accumulate from the highest cell down (block-aware when tie
@@ -779,12 +808,8 @@ def global_row_number(
     # effective global order is subkey ASC (the tie-break contract)
     # REGARDLESS of `ascending`.
     asc_eff = ascending or bucket_key != key
-    if plan["blocks"] is not None:
-        ids = sorted(plan["counts"], key=_cell_order(plan["blocks"], asc_eff))
-    else:
-        ids = sorted(plan["counts"], reverse=not asc_eff)
     offsets, running = {}, 0
-    for i in ids:
+    for i in sorted(plan["counts"], key=_cell_order(plan["blocks"], asc_eff)):
         offsets[i] = running
         running += plan["counts"][i]
 
@@ -837,9 +862,10 @@ def grouped_row_number(
     or a tiebreak sub-split when it is a dominant TIE (which no
     monotone key bucketing can spread) — every bucketing preserves the
     per-group total order, so results are bit-identical.  Below the
-    threshold the plan is job-for-job the r6 shape.  The probes and
-    boundaries memoize per (frame, group-cols, key) — once per session
-    for the static scans.
+    threshold the plan is job-for-job the r6 shape.  The cells come
+    from :func:`_cell_plan` (stragglers counted per (group, cell)),
+    memoized per (frame, group-cols, key) — once per session for the
+    static scans.
 
     NULL handling (r6 advice): group keys and the rank key may be
     NULL — the offset join is null-safe and a NULL key buckets into
@@ -861,83 +887,18 @@ def grouped_row_number(
         lo = hi = 0.0
     if num_ranges is None:
         num_ranges = _auto_num_ranges(n_total, df.sparkSession)
-    kd = F.col(key).cast("double")
-    chain = _tiebreak_chain(df, tiebreaks)
-    tb = tuple(name for name, _ in chain)  # full-chain memo key (r8 ADVICE)
-
-    def bucketed(cell_expr):
-        # 1-field struct group keys: null-safe partitioning/join for
-        # NULL groups without de-attributing the offset-join condition
-        # (see operators/adjacent.py with_next for the measured
-        # rationale); _grr itself is always non-null (NULL keys take
-        # the leading cell in every bucketing).
-        r = df.withColumn("_grr", cell_expr)
-        for g, c in zip(gkeys, group_cols):
-            r = r.withColumn(g, F.struct(F.col(c)))
-        return r
-
+    plan = _cell_plan(
+        df, key, n_total, lo, hi, num_ranges, groups=group_cols, tiebreaks=tiebreaks
+    )
+    # 1-field struct group keys: null-safe partitioning/join for NULL
+    # groups without de-attributing the offset-join condition (see
+    # operators/adjacent.py with_next for the measured rationale); _grr
+    # itself is always non-null (NULL keys take the leading cell in
+    # every bucketing).
     gkeys = [f"_grg{i}" for i in range(len(group_cols))]
-
-    def build_plan():
-        # skew probe on the UN-repartitioned frame: the hash agg
-        # map-side-combines to ≤|groups|×num_ranges rows, only
-        # straggler cells come to the driver, and the probe never pays
-        # the corpus shuffle (nor does a re-split waste one)
-        thr = _cell_threshold(n_total, num_ranges)
-
-        def strag_cells(expr):
-            return (
-                df.groupBy(
-                    *[
-                        F.struct(F.col(c)).alias(g)
-                        for g, c in zip(gkeys, group_cols)
-                    ],
-                    expr.alias("_grr"),
-                )
-                .agg(
-                    F.count(F.lit(1)).alias("_n"),
-                    F.min(kd).alias("_mn"),
-                    F.max(kd).alias("_mx"),
-                )
-                .filter(F.col("_n") > thr)
-                .collect()
-            )
-
-        bnds, B = None, num_ranges
-        strag = strag_cells(_range_expr(kd, lo, hi, num_ranges))
-        heavies = []
-        if strag:
-            vals = {float(r["_mn"]) for r in strag if r["_mn"] == r["_mx"]}
-            if any(r["_mn"] < r["_mx"] for r in strag):
-                bnds = _equidepth_boundaries(df, key, num_ranges, n_total)
-                B = len(bnds) + 1
-                strag = strag_cells(_boundary_expr(kd, bnds))
-                vals |= _dup_boundaries(bnds)
-                vals |= {float(r["_mn"]) for r in strag if r["_mn"] == r["_mx"]}
-            if vals and chain:
-                # a dominant tie value inside ONE group stragglers that
-                # group's cell; the tiebreak sub-bucketing (global
-                # boundaries — a superset range per group, still
-                # monotone) splits it for every group at once
-                heavies = _tie_stats(df, kd, sorted(vals), chain, df.sparkSession, thr)
-        return {"bnds": bnds, "B": B, "heavies": heavies}
-
-    if n_total > SKEW_CELL_ROWS and hi > lo:
-        plan = _memo_get(
-            df, ("grp_plan", tuple(group_cols), key, tb, num_ranges), build_plan
-        )
-    else:
-        plan = {"bnds": None, "B": num_ranges, "heavies": []}
-    base = (
-        _range_expr(kd, lo, hi, num_ranges)
-        if plan["bnds"] is None
-        else _boundary_expr(kd, plan["bnds"])
-    )
-    raw = bucketed(
-        _tie_cell_expr(kd, base, plan["B"], plan["heavies"])
-        if plan["heavies"]
-        else base
-    )
+    raw = df.withColumn("_grr", plan["cell"])
+    for g, c in zip(gkeys, group_cols):
+        raw = raw.withColumn(g, F.struct(F.col(c)))
     # explicit hash exchange on the cell key: the window finds its
     # distribution requirement satisfied (in-place sort) and the cell
     # counts come from a sort-free hash agg over the SAME exchange
@@ -1124,8 +1085,8 @@ def global_cumsum(
     pre-aggregates to distinct order values, as a CDF computation does);
     ties would be summed in nondeterministic intra-tie order otherwise.
     Auto-sized and skew-resilient like :func:`global_row_number` (the
-    per-range partials the device already collects carry the counts
-    that detect a straggler cell).
+    per-cell partials come from the same :func:`_cell_plan` probe that
+    counts rows to detect a straggler cell).
     """
     n_total, lo, hi = _stats(df, order_col)
     if lo is None:
@@ -1135,42 +1096,8 @@ def global_cumsum(
         return _propagate_memo(df, out)
     if num_ranges is None:
         num_ranges = _auto_num_ranges(n_total, df.sparkSession)
-
-    def build_plan():
-        def partials_of(expr):
-            rows = (
-                df.groupBy(expr.alias("_rdrng"))
-                .agg(
-                    F.count(F.lit(1)).alias("_rdn"),
-                    *[F.sum(c).alias(c) for c in sum_cols],
-                )
-                .collect()
-            )
-            return sorted((r.asDict() for r in rows), key=lambda r: r["_rdrng"])
-
-        bnds = None
-        partials = partials_of(_range_expr(F.col(order_col), lo, hi, num_ranges))
-        if partials and _is_straggler(
-            max(r["_rdn"] for r in partials), n_total, num_ranges
-        ):
-            # no tie-split here: the contract assumes unique order
-            # values (callers pre-aggregate to distinct order keys),
-            # so a straggler is always distinct-value skew that the
-            # equi-depth re-split spreads
-            bnds = _equidepth_boundaries(df, order_col, num_ranges, n_total)
-            partials = partials_of(_boundary_expr(F.col(order_col), bnds))
-        size = num_ranges if bnds is None else len(bnds) + 1
-        return {"bnds": bnds, "partials": partials, "size": size}
-
-    plan = _memo_get(
-        df, ("cumsum_plan", order_col, tuple(sum_cols), num_ranges), build_plan
-    )
-    ranged = df.withColumn(
-        "_rdrng",
-        _range_expr(F.col(order_col), lo, hi, num_ranges)
-        if plan["bnds"] is None
-        else _boundary_expr(F.col(order_col), plan["bnds"]),
-    )
+    plan = _cell_plan(df, order_col, n_total, lo, hi, num_ranges, totals=sum_cols)
+    ranged = df.withColumn("_rdrng", plan["cell"])
     w = Window.partitionBy("_rdrng").orderBy(F.col(order_col).asc()).rowsBetween(
         Window.unboundedPreceding, 0
     )
@@ -1178,11 +1105,11 @@ def global_cumsum(
     for c in sum_cols:
         local = local.withColumn(prefix + c, F.sum(c).over(w))
     shifts = {}
-    for c in sum_cols:
+    for c, sums in zip(sum_cols, plan["sums"]):
         offsets, running = {}, 0
-        for r in plan["partials"]:
-            offsets[int(r["_rdrng"])] = running
-            running += r[c] or 0
+        for i in sorted(sums):
+            offsets[i] = running
+            running += sums[i] or 0
         shifts[prefix + c] = (F.col(prefix + c), offsets)
     out = _shift_columns(local, "_rdrng", plan["size"], shifts).drop("_rdrng")
     return _propagate_memo(df, out)

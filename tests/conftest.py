@@ -41,3 +41,34 @@ def shielded_rdd_ids(spark):
         }
 
     return ids
+
+
+@pytest.fixture
+def quantile_normalize_by_window():
+    """``datapipe.quantile_normalize`` spelled with plain windows (a
+    single-partition global rank) — the reference for its skew-path
+    tests."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    def ref(df, v, g, i):
+        w_all = Window.orderBy(F.col(v).asc(), F.col(i).asc())
+        glob = df.coalesce(1).select(
+            F.row_number().over(w_all).cast("long").alias("_t"),
+            F.col(v).cast("double").alias("norm_value"),
+        )
+        n = df.count()
+        w_grp = Window.partitionBy(g).orderBy(F.col(v).asc(), F.col(i).asc())
+        pr = (F.row_number().over(w_grp) - 1).cast("double") / F.greatest(
+            F.count(F.lit(1)).over(Window.partitionBy(g)) - 1, F.lit(1)
+        ).cast("double")
+        scored = df.select(
+            i,
+            g,
+            F.col(v).cast("double").alias(v),
+            F.round(pr, 6).alias("pr"),
+            (F.round(pr * F.lit(float(n - 1)), 0) + 1).cast("long").alias("_t"),
+        )
+        return scored.join(glob, "_t").select(i, g, v, "pr", "norm_value")
+
+    return ref

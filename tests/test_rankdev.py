@@ -5,6 +5,8 @@ bit-identical, just partitioned."""
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -264,3 +266,95 @@ def test_memo_propagation_and_prime_stats(spark):
         .count()
         == 0
     )
+
+
+# ---- serial statistics rounds: a job budget per device ------------------
+
+_BUDGET_GROUPS = itertools.count()
+
+
+def _jobs_scheduled(spark, fn) -> int:
+    """Spark jobs ``fn`` schedules, counted under a job group of its own."""
+    sc = spark.sparkContext
+    group = f"range-device-budget-{next(_BUDGET_GROUPS)}"
+    sc.setJobGroup(group, "range device job budget")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+# Jobs each device schedules before its action, on a first call over a
+# frame below the straggler bar: the bounds aggregate, plus the per-cell
+# probe where the offsets need it (AQE runs the shuffle stage of a
+# collect as a job of its own); quantile_normalize adds the eager cut
+# of its global rank.  The ceilings are the counts measured
+# when each device still wrote out its own bucketing policy, so a
+# change that adds serial rounds to the served path fails here.
+DEVICE_JOB_BUDGET = {
+    "global_row_number": 4,
+    "grouped_row_number": 2,
+    "global_cumsum": 4,
+    "with_next": 2,
+    "with_prefix_max": 2,
+    "quantile_normalize": 8,
+}
+
+
+def test_range_device_job_budget(spark):
+    from kg_etl_spark.operators.adjacent import with_next, with_prefix_max
+    from kg_etl_spark.operators.datapipe import quantile_normalize
+    from kg_etl_spark.operators.rankdev import grouped_row_number
+
+    devices = {
+        "global_row_number": lambda d: global_row_number(
+            d, "ts", tiebreaks=["event_id"]
+        ),
+        "grouped_row_number": lambda d: grouped_row_number(
+            d, ["event_type"], "ts", ["event_id"]
+        ),
+        "global_cumsum": lambda d: global_cumsum(d, "ts", ["user_id"]),
+        "with_next": lambda d: with_next(
+            d, ["event_type"], "ts", ["event_id"], ["user_id"]
+        ),
+        "with_prefix_max": lambda d: with_prefix_max(
+            d, ["event_type"], "ts", ["event_id"], "user_id"
+        ),
+        "quantile_normalize": lambda d: quantile_normalize(
+            d, "ts", "event_type", "event_id"
+        ),
+    }
+    got = {}
+    for name, device in devices.items():
+        # a fresh frame per device: its statistics memo starts empty
+        ev = spark.range(2000).select(
+            F.col("id").alias("event_id"),
+            F.concat(F.lit("t"), (F.col("id") % 3).cast("string")).alias("event_type"),
+            (F.col("id") * 2654435761 % 9973).alias("user_id"),
+            ((F.col("id") * 7919) % 100_003).cast("double").alias("ts"),
+        ).localCheckpoint(eager=True)
+        got[name] = _jobs_scheduled(spark, lambda: device(ev))
+    assert all(got[k] <= DEVICE_JOB_BUDGET[k] for k in got), got
+
+
+# rfm_segments before its action: the eager cut of the per-customer
+# frame, prime_stats (one bounds job for the three keys) and the three
+# global_row_number per-cell probes.  Measured as DEVICE_JOB_BUDGET.
+RFM_EAGER_JOB_BUDGET = 14
+
+
+def test_rfm_segments_eager_job_budget(spark, tmp_path):
+    from kg_etl_spark.queries import QUERIES
+
+    spark.range(3000).select(
+        F.col("id").alias("o_orderkey"),
+        (F.col("id") * 7919 % 401).alias("o_custkey"),
+        ((F.col("id") * 48271) % 90_000 / 100.0).alias("o_totalprice"),
+        F.timestamp_micros(
+            F.lit(694_224_000_000_000) + (F.col("id") * 2654435761 % 2400) * 86_400_000_000
+        ).alias("o_orderdate"),
+    ).write.parquet(str(tmp_path / "orders.parquet"))
+    jobs = _jobs_scheduled(spark, lambda: QUERIES["rfm_segments"](spark, str(tmp_path)))
+    assert 0 < jobs <= RFM_EAGER_JOB_BUDGET, jobs

@@ -50,11 +50,11 @@ def test_auto_num_ranges_clamps():
 
 def test_is_straggler_needs_absolute_size_and_imbalance():
     # big AND >4x even share -> straggler
-    assert rd._is_straggler(5_000_000, 20_000_000, 64)
+    assert 5_000_000 > rd._cell_threshold(20_000_000, 64)
     # big but balanced (even share 5M) -> not a straggler
-    assert not rd._is_straggler(5_000_000, 320_000_000, 64)
+    assert not 5_000_000 > rd._cell_threshold(320_000_000, 64)
     # imbalanced but small in absolute terms -> never re-split
-    assert not rd._is_straggler(900, 1000, 64)
+    assert not 900 > rd._cell_threshold(1000, 64)
 
 
 def test_boundary_expr_matches_bruteforce(spark):
@@ -111,11 +111,9 @@ def test_equidepth_balances_bursty(spark):
 
 @pytest.fixture()
 def small_thresholds(monkeypatch):
-    # _is_straggler reads rankdev's module global at call time;
-    # adjacent._cell_expr reads its own imported copy for the fast-path
-    # gate — patch both so a ~20k-row frame exercises the scale path.
+    # the cell planner (rankdev._cell_plan) reads the module global at
+    # call time, so a ~20k-row frame exercises the scale path
     monkeypatch.setattr(rd, "SKEW_CELL_ROWS", 500)
-    monkeypatch.setattr(adj, "SKEW_CELL_ROWS", 500)
 
 
 def _bursty_events(spark, n=20_000):
@@ -138,9 +136,24 @@ def test_with_next_bursty_resplit_bit_identical(spark, small_thresholds):
     )
     want = ev.withColumn("next_user_id", F.lead("user_id").over(w))
     assert _rows(got) == _rows(want)
-    # the equi-depth path was actually taken: the boundary memo filled
-    memo = adj._memo(ev)
-    assert any(isinstance(k, tuple) for k in memo), memo.keys()
+    # the equi-depth path was actually taken: the planner's boundaries
+    # are memoized
+    memo = rd._memo(ev)
+    nr = rd._auto_num_ranges(20_000, spark)
+    plan = memo.get(("cells", "ts", ("event_type",), ("event_id",), nr, None))
+    assert plan and plan["bnds"], memo.keys()
+
+
+def test_with_prefix_max_bursty_resplit_bit_identical(spark, small_thresholds):
+    ev = _bursty_events(spark)
+    got = adj.with_prefix_max(ev, ["event_type"], "ts", ["event_id"], "user_id")
+    w = (
+        Window.partitionBy("event_type")
+        .orderBy(F.col("ts").asc(), F.col("event_id").asc())
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    want = ev.withColumn("prefix_max_excl", F.max("user_id").over(w))
+    assert _rows(got) == _rows(want)
 
 
 def test_global_row_number_bursty_resplit_exact(spark, small_thresholds):
@@ -164,6 +177,36 @@ def test_grouped_row_number_bursty_resplit_exact(spark, small_thresholds):
     want = df.withColumn("rn", F.row_number().over(w).cast("long")).withColumn(
         "n", F.count(F.lit(1)).over(cw).cast("long")
     )
+    assert _rows(got) == _rows(want)
+
+
+def test_grouped_row_number_all_null_key_straggler_cell(spark, small_thresholds):
+    # one group's keys are all NULL, so its leading (group, cell) is a
+    # straggler whose min/max are NULL: there is nothing to split, and
+    # the plan must keep the width cells rather than fail
+    df = spark.range(3000).select(
+        F.col("id").alias("tb"),
+        (F.col("id") % 3).alias("g"),
+        F.when(F.col("id") % 3 == 0, F.lit(None).cast("double"))
+        .otherwise((F.col("id") * 7919 % 100_003).cast("double"))
+        .alias("k"),
+    )
+    got = rd.grouped_row_number(df, ["g"], "k", ["tb"], out_col="rn", count_col="n")
+    w = Window.partitionBy("g").orderBy(F.col("k").asc(), F.col("tb").asc())
+    want = df.withColumn("rn", F.row_number().over(w).cast("long")).withColumn(
+        "n", F.count(F.lit(1)).over(Window.partitionBy("g")).cast("long")
+    )
+    assert _rows(got) == _rows(want)
+
+
+def test_quantile_normalize_bursty_resplit_exact(
+    spark, small_thresholds, quantile_normalize_by_window
+):
+    from kg_etl_spark.operators.datapipe import quantile_normalize
+
+    ev = _bursty_events(spark, 10_000)
+    got = quantile_normalize(ev, "ts", "event_type", "event_id")
+    want = quantile_normalize_by_window(ev, "ts", "event_type", "event_id")
     assert _rows(got) == _rows(want)
 
 

@@ -71,10 +71,9 @@ def test_ntile_col_expr_matches_driver_formula_on_boundaries(spark):
 
 @pytest.fixture()
 def tie_thresholds(monkeypatch):
-    # SKEW_CELL_ROWS gates the probes (read at call time in both
-    # modules); TARGET_CELL_ROWS sizes the tie sub-cells in _tie_stats
+    # SKEW_CELL_ROWS gates the cell planner's probes (read at call
+    # time); TARGET_CELL_ROWS sizes the tie sub-cells in _tie_stats
     monkeypatch.setattr(rd, "SKEW_CELL_ROWS", 500)
-    monkeypatch.setattr(adj, "SKEW_CELL_ROWS", 500)
     monkeypatch.setattr(rd, "TARGET_CELL_ROWS", 500)
 
 
@@ -102,16 +101,12 @@ def test_with_next_heavy_tie_bit_identical_and_balanced(spark, tie_thresholds):
     want = ev.withColumn("next_user_id", F.lead("user_id").over(w))
     assert _rows(got) == _rows(want)
     # the tie split actually engaged...
-    heav = [
-        v
-        for k, v in adj._memo(ev).items()
-        if isinstance(k, tuple) and k[0] == "heavy"
-    ]
-    assert heav and heav[0], "tie split did not engage"
-    # ...and spread the tie: no (group, cell) above 2x the even share
-    n, lo, hi = adj._order_stats(ev, "ts")
+    n, lo, hi = rd._stats(ev, "ts")
     nr = rd._auto_num_ranges(n, spark)
-    cell = adj._cell_expr(ev, "ts", n, lo, hi, nr, ["event_id"])
+    plan = rd._memo(ev)[("cells", "ts", ("event_type",), ("event_id",), nr, None)]
+    assert plan["heavies"], "tie split did not engage"
+    # ...and spread the tie: no (group, cell) above 2x the even share
+    cell = plan["cell"]
     mx = (
         ev.groupBy("event_type", cell.alias("c"))
         .count()
@@ -119,6 +114,29 @@ def test_with_next_heavy_tie_bit_identical_and_balanced(spark, tie_thresholds):
         .collect()[0][0]
     )
     assert mx <= 2 * n / nr, mx
+
+
+def test_with_prefix_max_heavy_tie_bit_identical(spark, tie_thresholds):
+    ev = _heavy_tie_events(spark)
+    got = adj.with_prefix_max(ev, ["event_type"], "ts", ["event_id"], "user_id")
+    w = (
+        Window.partitionBy("event_type")
+        .orderBy(F.col("ts").asc(), F.col("event_id").asc())
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    want = ev.withColumn("prefix_max_excl", F.max("user_id").over(w))
+    assert _rows(got) == _rows(want)
+
+
+def test_quantile_normalize_heavy_tie_exact(
+    spark, tie_thresholds, quantile_normalize_by_window
+):
+    from kg_etl_spark.operators.datapipe import quantile_normalize
+
+    ev = _heavy_tie_events(spark, 12_000)
+    got = quantile_normalize(ev, "ts", "event_type", "event_id")
+    want = quantile_normalize_by_window(ev, "ts", "event_type", "event_id")
+    assert _rows(got) == _rows(want)
 
 
 def test_global_row_number_heavy_tie_exact(spark, tie_thresholds):
@@ -188,7 +206,7 @@ def test_tiebreak_key_uses_first_column_only(spark, tie_thresholds):
     want = df.coalesce(1).withColumn("rn", F.row_number().over(w).cast("long"))
     assert _rows(got) == _rows(want)
     nr = rd._auto_num_ranges(n, spark)
-    plan = rd._memo(df)[("grn_plan", "v", ("s", "event_id"), nr)]
+    plan = rd._memo(df)[("cells", "v", (), ("s", "event_id"), nr, ())]
     assert plan["heavies"], "string-first tie split did not engage"
 
 
@@ -207,7 +225,7 @@ def test_string_tiebreak_heavy_tie_exact(spark, tie_thresholds):
     want = df.coalesce(1).withColumn("rn", F.row_number().over(w).cast("long"))
     assert _rows(got) == _rows(want)
     nr = rd._auto_num_ranges(n, spark)
-    plan = rd._memo(df)[("grn_plan", "v", ("uid",), nr)]
+    plan = rd._memo(df)[("cells", "v", (), ("uid",), nr, ())]
     assert plan["heavies"], "string tie split did not engage"
     # ...and actually spread the tie across sub-cells
     assert max(plan["counts"].values()) < 0.6 * n
@@ -234,7 +252,7 @@ def test_tiebreak_cascade_constant_first_level(spark, tie_thresholds):
     want = df.coalesce(1).withColumn("rn", F.row_number().over(w).cast("long"))
     assert _rows(got) == _rows(want)
     nr = rd._auto_num_ranges(n, spark)
-    plan = rd._memo(df)[("grn_plan", "v", ("s", "event_id"), nr)]
+    plan = rd._memo(df)[("cells", "v", (), ("s", "event_id"), nr, ())]
     assert plan["heavies"], "cascade did not split the constant-t0 tie"
     assert max(plan["counts"].values()) < 0.6 * n
 
@@ -259,7 +277,7 @@ def test_string_monokey_monotone(spark):
             chars.append(alphabet[rng_state % len(alphabet)])
         strs.append("".join(chars))
     df = spark.createDataFrame([(s,) for s in strs], "s string")
-    _, expr = rd._tiebreak_key(df, ["s"])
+    _, expr = rd._tiebreak_chain(df, ["s"])[0]
     rows = df.select("s", expr.alias("k")).collect()
     by_str = sorted(rows, key=lambda r: r["s"])
     ks = [r["k"] for r in by_str]
@@ -279,7 +297,7 @@ def test_pure_tie_skips_equidepth_sketch(spark, tie_thresholds):
     )
     got, _ = rd.global_row_number(df, "v", tiebreaks=["tb"])
     nr = rd._auto_num_ranges(n, spark)
-    plan = rd._memo(df)[("grn_plan", "v", ("tb",), nr)]
+    plan = rd._memo(df)[("cells", "v", (), ("tb",), nr, ())]
     assert plan["bnds"] is None, "useless equi-depth re-split ran on a pure tie"
     assert plan["heavies"], "tie split did not engage"
     w = Window.orderBy(F.col("v").asc(), F.col("tb").asc())

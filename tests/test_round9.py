@@ -34,7 +34,6 @@ def _rows(df):
 @pytest.fixture()
 def tie_thresholds(monkeypatch):
     monkeypatch.setattr(rd, "SKEW_CELL_ROWS", 500)
-    monkeypatch.setattr(adj, "SKEW_CELL_ROWS", 500)
     monkeypatch.setattr(rd, "TARGET_CELL_ROWS", 500)
 
 
@@ -71,7 +70,7 @@ def test_cascade_constant_plus_nulls_bit_identical(spark, tie_thresholds):
     want = df.coalesce(1).withColumn("rn", F.row_number().over(w).cast("long"))
     assert _rows(got) == _rows(want)
     nr = rd._auto_num_ranges(20_000, spark)
-    plan = rd._memo(df)[("grn_plan", "v", ("s", "event_id"), nr)]
+    plan = rd._memo(df)[("cells", "v", (), ("s", "event_id"), nr, ())]
     assert plan["heavies"], "mixed-null tie did not split"
     # the guard cell holds exactly the NULL-t0 tie rows (~6k·1/3); the
     # remainder spread over the t1 buckets — no cell near the full tie
@@ -111,7 +110,7 @@ def test_cascade_all_null_level_guard_free(spark, tie_thresholds):
     want = df.coalesce(1).withColumn("rn", F.row_number().over(w).cast("long"))
     assert _rows(got) == _rows(want)
     nr = rd._auto_num_ranges(n, spark)
-    plan = rd._memo(df)[("grn_plan", "v", ("s", "event_id"), nr)]
+    plan = rd._memo(df)[("cells", "v", (), ("s", "event_id"), nr, ())]
     assert plan["heavies"], "all-null-t0 tie did not cascade to t1"
     # guard-free cascade: K-sized like a plain level-1 split, and the
     # tie actually spread
@@ -143,7 +142,7 @@ def test_guards_only_split_when_chain_exhausts(spark, tie_thresholds):
     want = df.coalesce(1).withColumn("rn", F.row_number().over(w).cast("long"))
     assert _rows(got) == _rows(want)
     nr = rd._auto_num_ranges(n, spark)
-    plan = rd._memo(df)[("grn_plan", "v", ("s",), nr)]
+    plan = rd._memo(df)[("cells", "v", (), ("s",), nr, ())]
     assert plan["heavies"], "guard-only split did not engage"
     assert plan["heavies"][0][1] == 2  # NULL guard cell + residual cell
 
@@ -207,10 +206,10 @@ def test_memo_key_carries_full_chain(spark, tie_thresholds):
     rd.global_row_number(df, "v", tiebreaks=["s"])
     nr = rd._auto_num_ranges(20_000, spark)
     memo = rd._memo(df)
-    assert ("grn_plan", "v", ("s", "event_id"), nr) in memo
-    assert ("grn_plan", "v", ("s",), nr) in memo
-    deep = memo[("grn_plan", "v", ("s", "event_id"), nr)]
-    shallow = memo[("grn_plan", "v", ("s",), nr)]
+    assert ("cells", "v", (), ("s", "event_id"), nr, ()) in memo
+    assert ("cells", "v", (), ("s",), nr, ()) in memo
+    deep = memo[("cells", "v", (), ("s", "event_id"), nr, ())]
+    shallow = memo[("cells", "v", (), ("s",), nr, ())]
     # the deep chain splits by event_id (many sub-cells); the shallow
     # one can only guard-split (2 cells) — distinct plans, not a reuse
     assert deep["heavies"][0][1] > shallow["heavies"][0][1] == 2

@@ -26,7 +26,7 @@ Leg (r8): ``--heavy-tie`` puts ≥50% of the events at ONE microsecond
 timestamp — the dominant-tie regime NO monotone bucketing of the key
 can split (equi-depth keeps ties together), so the r7 device put half
 the corpus in one sort task.  The r8 tiebreak sub-bucketing
-(rankdev._tie_cell_expr) must spread the tie: the leg asserts the same
+(rankdev._cell_plan's tie split) must spread the tie: the leg asserts the same
 2×-of-even-share cell bar AND the exact signature match.
 
 Usage: python tools/stress_adjacent.py [n_events] [--one-type] [--bursty]
@@ -96,15 +96,15 @@ def cell_balance(ev, n_rows):
     """(num_ranges, max (group, range) cell rows) under the device's
     own sizing/bucketing decision (tiebreaks included, so the heavy-tie
     sub-split is visible) — the r7/r8 skew acceptance metric."""
-    from kg_etl_spark.operators.adjacent import _cell_expr, _order_stats
-    from kg_etl_spark.operators.rankdev import _auto_num_ranges
+    from kg_etl_spark.operators.rankdev import _auto_num_ranges, _cell_plan, _stats
 
-    n, lo, hi = _order_stats(ev, "ts")
+    n, lo, hi = _stats(ev, "ts")
     num_ranges = _auto_num_ranges(n, ev.sparkSession)
+    plan = _cell_plan(
+        ev, "ts", n, lo, hi, num_ranges, groups=["event_type"], tiebreaks=["event_id"]
+    )
     mx = (
-        ev.withColumn(
-            "_apr", _cell_expr(ev, "ts", n, lo, hi, num_ranges, ["event_id"])
-        )
+        ev.withColumn("_apr", plan["cell"])
         .groupBy("event_type", "_apr")
         .count()
         .agg(F.max("count"))

@@ -223,7 +223,7 @@ def stress_heavy_tie(spark):
     sig_dev = signature(ranked)
     dt = time.time() - t0
     num_ranges = _auto_num_ranges(n_tot, spark)
-    plan = _memo(df)[("grn_plan", "k", ("tb",), num_ranges)]
+    plan = _memo(df)[("cells", "k", (), ("tb",), num_ranges, ())]
     assert plan["heavies"], "tie split did not engage"
     mx = max(plan["counts"].values())
     target = n / num_ranges
@@ -290,7 +290,7 @@ def stress_heavy_tie_nulls(spark):
     sig_dev = signature(ranked)
     dt = time.time() - t0
     num_ranges = _auto_num_ranges(n_tot, spark)
-    plan = _memo(df)[("grn_plan", "k", ("s", "tb"), num_ranges)]
+    plan = _memo(df)[("cells", "k", (), ("s", "tb"), num_ranges, ())]
     assert plan["heavies"], "mixed-null tie split did not engage"
     mx = max(plan["counts"].values())
     target = n / num_ranges
@@ -314,7 +314,7 @@ def stress_heavy_tie_nulls(spark):
 def stress_heavy_tie_str(spark):
     # r8 follow-up: the dominant-tie regime where the ONLY tiebreak is
     # a STRING (user/doc ids — common in real corpora). The 6-byte
-    # binary-prefix sub-bucketing (rankdev._tiebreak_key) must spread
+    # binary-prefix sub-bucketing (rankdev._tiebreak_chain) must spread
     # the tie (no cell > 2x the even share) while the rank signature
     # stays exactly the naive single-task window's.
     from pyspark.sql import Window
@@ -349,7 +349,7 @@ def stress_heavy_tie_str(spark):
     sig_dev = signature(ranked)
     dt = time.time() - t0
     num_ranges = _auto_num_ranges(n_tot, spark)
-    plan = _memo(df)[("grn_plan", "k", ("s",), num_ranges)]
+    plan = _memo(df)[("cells", "k", (), ("s",), num_ranges, ())]
     assert plan["heavies"], "string tie split did not engage"
     mx = max(plan["counts"].values())
     target = n / num_ranges
