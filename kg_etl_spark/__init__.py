@@ -10,7 +10,7 @@ text quality, multimodal plumbing) that a 100 TB corpus needs.
 
 Design rules (see SURVEY.md §7):
 - DataFrame/SQL first; Catalyst/AQE does the physical planning.
-- Pandas UDFs only where no native expression exists (rapidfuzz,
+- Pandas UDFs only where no native expression exists (fuzzy ratio,
   wikitext parsing, per-group union-find).
 - Every operator is a composable function `(DataFrame, ...) -> DataFrame`
   so Catalyst optimizes whole pipelines jointly.

@@ -1,5 +1,5 @@
 """Scalar function kernels: geo, text, ids, stats.
 
 All are native Column expressions unless impossible (NFKD de-accent,
-rapidfuzz, point-in-polygon → pandas UDFs, clearly marked).
+fuzzy ratio, point-in-polygon → pandas UDFs, clearly marked).
 """

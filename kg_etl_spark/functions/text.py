@@ -4,9 +4,9 @@ Capability parity with the reference's text helpers (normalize_name
 `etl/utils.py:68-77`, slugify `etl/er.py:30-34`, token extraction +
 light stemming `etl/er.py:54-65`, stopword filtering `etl/er.py:15-28`,
 jaccard `etl/er.py:70-76`, sorted-token substring `etl/er.py:78-82`,
-rapidfuzz similarity `etl/er.py:92-100`), built Spark-first: everything
-is a native Column expression except NFKD de-accent and rapidfuzz,
-which are vectorized pandas UDFs.
+fuzzy similarity `etl/er.py:92-100`), built Spark-first: everything
+is a native Column expression except NFKD de-accent and the fuzzy
+ratio, which are vectorized pandas UDFs.
 """
 
 from __future__ import annotations
@@ -119,32 +119,24 @@ def nfkd_ascii_udf():
 
 
 def fuzzy_ratio_udf():
-    """rapidfuzz name similarity (0..1) — vectorized pandas UDF:
-    max(token_set_ratio, token_sort_ratio, partial_ratio), the ER
-    variant. Falls back to a difflib-based ratio when rapidfuzz is
-    absent in the environment.
+    """Name similarity (0..1) — vectorized pandas UDF scoring each pair
+    with difflib's ``SequenceMatcher.ratio``; a NULL side scores 0.0.
+    One scorer in every environment, so the fuzzy ER results do not
+    depend on which packages are installed. The reference's ER variant,
+    max(token_set_ratio, token_sort_ratio, partial_ratio) from
+    rapidfuzz, waits until rapidfuzz is part of the environment.
     """
+    import difflib
+
     from pyspark.sql.functions import pandas_udf
-
-    try:
-        from rapidfuzz import fuzz
-
-        def score(a: str, b: str) -> float:
-            return (
-                max(fuzz.token_set_ratio(a, b), fuzz.token_sort_ratio(a, b), fuzz.partial_ratio(a, b))
-                / 100.0
-            )
-
-    except ImportError:  # environment gate — container may not ship rapidfuzz
-        import difflib
-
-        def score(a: str, b: str) -> float:
-            return difflib.SequenceMatcher(None, a, b).ratio()
 
     @pandas_udf("double")
     def _sim(a: pd.Series, b: pd.Series) -> pd.Series:
         return pd.Series(
-            [0.0 if x is None or y is None else score(x, y) for x, y in zip(a.values, b.values)]
+            [
+                0.0 if x is None or y is None else difflib.SequenceMatcher(None, x, y).ratio()
+                for x, y in zip(a.values, b.values)
+            ]
         )
 
     return _sim

@@ -55,7 +55,7 @@ order the thing you must never ask one task to produce.
 
 from __future__ import annotations
 
-from typing import Optional, Sequence, Tuple
+from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -325,47 +325,3 @@ def with_prefix_max(
         ).otherwise(F.coalesce("_apl", "_apc")),
     )
     return out.select(*df.columns, out_col)
-
-
-def stream_state(ev: DataFrame) -> DataFrame:
-    """Per-type LAST event (by ts, event_id) — the carry state of the
-    incremental derivation: one map-side-combinable max_by aggregate,
-    |types| rows."""
-    return ev.groupBy("event_type").agg(
-        F.max_by(
-            F.struct("user_id", "ts", "event_id"), F.struct("ts", "event_id")
-        ).alias("_last")
-    ).select(
-        "event_type",
-        F.col("_last.user_id").alias("user_id"),
-        F.col("_last.ts").alias("ts"),
-        F.col("_last.event_id").alias("event_id"),
-    )
-
-
-def transition_edges_incremental(
-    batch: DataFrame, state: Optional[DataFrame] = None
-) -> Tuple[DataFrame, DataFrame]:
-    """Incremental user-transition maintenance: given a NEW event batch
-    and the per-type last-event ``state`` of everything already
-    processed, return (delta_edges, new_state) such that the union of
-    all batches' delta edges equals :func:`transition_edges` over the
-    full stream (property-tested) — the pattern that makes a 100 TB
-    transition graph maintainable per-batch instead of re-derived per
-    refresh (the minhash_index discipline applied to the graph family).
-
-    Contract: batches arrive in stream order — every event of the new
-    batch sorts AFTER the state's last event within its type (true for
-    append-only event logs; violating it produces edges of a different
-    interleaving, not an error).
-
-    Cost: the scale-safe stream lead over the batch + one |types|-row
-    broadcast union; state is |types| rows."""
-    full = batch if state is None else state.select(
-        "event_type", "user_id", "ts", "event_id"
-    ).unionByName(batch.select("event_type", "user_id", "ts", "event_id"))
-    led = stream_lead(full, ["user_id"])
-    edges = led.select(
-        F.col("user_id").alias("src"), F.col("next_user_id").alias("dst")
-    ).filter(F.col("dst").isNotNull() & (F.col("src") != F.col("dst")))
-    return edges, stream_state(full)

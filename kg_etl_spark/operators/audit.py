@@ -96,24 +96,6 @@ def equi_width_histogram(
     )
 
 
-def file_manifest(spark, path: str) -> DataFrame:
-    """Per-file audit manifest of a parquet dataset: rows per physical
-    file via input_file_name() — the first thing to look at when a
-    table scans slowly (file-count explosion, skewed file sizes).
-
-    One aggregate keyed by file path; the scan is column-pruned to
-    nothing but the virtual file column, so this reads footers + one
-    column's pages at most. Compose with compact_parquet when the
-    manifest shows a small-files problem.
-    """
-    df = spark.read.parquet(path)
-    return (
-        df.groupBy(F.input_file_name().alias("file"))
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .orderBy("file")
-    )
-
-
 def check_expectations(
     df: DataFrame, rules: "dict[str, object]"
 ) -> DataFrame:

@@ -108,54 +108,3 @@ def bpe_encode(
             ).alias("pieces_md5"),
         )
     )
-
-
-def bpe_train(
-    corpus: DataFrame,
-    rounds: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> list[tuple[str, str]]:
-    """Learn a BPE merge table from the corpus: each round counts
-    adjacent-piece pairs over the CURRENT segmentation (weighted by
-    word frequency) and merges the most frequent pair (count desc,
-    pair asc — total tie-break, so training is deterministic).
-
-    Scale shape per round: pair counting is one aggregate over the
-    distinct-word vocabulary re-encoded map-side in Arrow batches with
-    the merges learned so far (|types| Python work, like `bpe_encode`);
-    the argmax is a 1-row TakeOrdered. `rounds` model rows come back to
-    the driver — model-scale, not data-scale.
-    """
-    from typing import Iterator
-
-    toks = corpus.select(F.explode(ws_tokens(F.col(text_col))).alias("_w"))
-    wc = toks.groupBy("_w").agg(F.count(F.lit(1)).alias("_n")).lineage_cut(
-        eager=True
-    )  # vocabulary + frequencies: reused every round
-
-    merges: list[tuple[str, str]] = []
-    for _ in range(rounds):
-        ranks = {m: i for i, m in enumerate(merges)}
-
-        def pairs_of(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for w, n in zip(pdf["_w"], pdf["_n"]):
-                    pieces = bpe_word(w, ranks)
-                    for i in range(len(pieces) - 1):
-                        rows.append((pieces[i], pieces[i + 1], int(n)))
-                yield pd.DataFrame(rows, columns=["l", "r", "n"])
-
-        top = (
-            wc.mapInPandas(pairs_of, schema="l string, r string, n long")
-            .groupBy("l", "r")
-            .agg(F.sum("n").alias("cnt"))
-            .orderBy(F.col("cnt").desc(), F.col("l").asc(), F.col("r").asc())
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        merges.append((top[0]["l"], top[0]["r"]))
-    return merges

@@ -89,7 +89,7 @@ def _sig_udf(num_hashes: int):
     cannot keep fast (measured: the per-seed-xxhash64 aggregate cost
     ~0.45 s of the 0.8 s signature phase at sf0.1; this UDF form took
     the minhash bench row from ~1.7 s to ~1.2 s). This is one of the
-    repo's documented vectorized-Pandas-UDF sites (with rapidfuzz,
+    repo's documented vectorized-Pandas-UDF sites (with the fuzzy ratio,
     NFKD, point-in-polygon): Python in the plan, but Arrow-batched and
     numpy-vectorized — never row-at-a-time."""
     import numpy as np
@@ -566,8 +566,8 @@ def minhash_index(
     shh = _sig_shingles(df, id_col, text_col, n, num_hashes).lineage_cut(eager=True)
     # stored shingle frame is (_id, _shh) ONLY: the signature is fully
     # encoded in the band table, so persisting _sig would just bloat
-    # the index (and the store schema is a public contract — streaming
-    # maintainers append to it batch after batch)
+    # the index (and the store schema is a public contract —
+    # `minhash_lsh_pairs_incremental` appends to it batch after batch)
     return {
         "banded": _band_table(shh, num_hashes, bands),
         "shingles": shh.select("_id", "_shh"),

@@ -2,7 +2,7 @@
 re-expressed Spark-first, see SURVEY §7.2 step 5).
 
 Pipeline: grid-blocked candidate pairs (J6) → native similarity columns
-(token-set Jaccard F7; optional rapidfuzz pandas UDF X1) → accept rule
+(token-set Jaccard F7; optional fuzzy-ratio pandas UDF X1) → accept rule
 (distance/similarity when-tree, X7) → connected components (A7) →
 canonical representative per cluster (A4: longest name, totalized
 tie-break) → assignment of every input row to a canonical id.
@@ -57,7 +57,7 @@ def candidate_links(
     [, a_<c>/b_<c> for each carry col].
 
     name_jac is a native token-set Jaccard (no Python); fuzzy_sim adds
-    the rapidfuzz pandas UDF when requested. carry_cols (e.g. `source`)
+    the fuzzy-ratio pandas UDF when requested. carry_cols (e.g. `source`)
     ride along for diagnostics.
     """
     # tokenize ONCE per row before pairing: candidate pairs outnumber

@@ -66,38 +66,6 @@ def finalize_rollup(state: DataFrame) -> DataFrame:
     )
 
 
-def partial_distinct_sketch(
-    df: DataFrame, keys: Sequence[str], distinct_col: str, lg_k: int = 14
-) -> DataFrame:
-    """Mergeable distinct-count state per key group: a Datasketches
-    HLL sketch (binary column). Exact countDistinct does NOT merge
-    (distincts of slices overlap); the sketch does — this is how
-    'distinct users per day' stays incrementally maintainable at
-    100 TB with bounded (~2^lg_k bytes/key) state."""
-    return df.groupBy(*keys).agg(
-        F.hll_sketch_agg(F.col(distinct_col), F.lit(lg_k)).alias("hll")
-    )
-
-
-def merge_distinct_sketches(
-    states: Sequence[DataFrame], keys: Sequence[str]
-) -> DataFrame:
-    """Union HLL states across batches; associative + commutative."""
-    it = iter(states)
-    unioned = next(it)
-    for s in it:
-        unioned = unioned.unionByName(s)
-    return unioned.groupBy(*keys).agg(F.hll_union_agg("hll").alias("hll"))
-
-
-def finalize_distinct_sketch(state: DataFrame) -> DataFrame:
-    """Read-time estimate from the carried sketch."""
-    return state.select(
-        *[c for c in state.columns if c != "hll"],
-        F.hll_sketch_estimate("hll").alias("n_distinct_est"),
-    )
-
-
 def incremental_exact_dedup(
     batch: DataFrame,
     seen_fps: DataFrame,

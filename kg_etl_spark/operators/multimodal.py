@@ -18,13 +18,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType([
-    T.StructField("media_id", T.StringType(), False),
-    T.StructField("media_type", T.StringType()),  # image|audio|video
-    T.StructField("payload", T.BinaryType()),
-    T.StructField("meta", T.MapType(T.StringType(), T.StringType())),
-])
-
 FEATURE_SCHEMA = T.StructType([
     T.StructField("media_id", T.StringType(), False),
     T.StructField("n_bytes", T.LongType()),
@@ -80,71 +73,3 @@ def extract_features(df: DataFrame, fake: bool = False, dim: int = 8) -> DataFra
             )
 
     return df.mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
-def resize_images(
-    df: DataFrame, target_w: int, target_h: int, fake: bool = False
-) -> DataFrame:
-    """Resize every image payload to (target_w, target_h) via
-    mapInPandas; output keeps MEDIA_SCHEMA with meta recording the new
-    dimensions. Real resizing needs PIL → NotImplementedError unless
-    fake=True (deterministic byte resampling that preserves payload
-    identity: same input ⇒ same output).
-    """
-    if not fake:
-        raise NotImplementedError(
-            "real image resize needs PIL — not available; pass fake=True"
-        )
-    n_out = max(1, (target_w * target_h) // 64)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, mtype, payload, meta in zip(
-                pdf["media_id"], pdf["media_type"], pdf["payload"], pdf["meta"]
-            ):
-                b = bytes(payload) if payload is not None else b""
-                # deterministic "resample": stride-sample/zero-pad bytes
-                step = max(1, len(b) // n_out)
-                out = b[::step][:n_out].ljust(n_out, b"\0")
-                m = dict(meta or {})
-                m.update({"width": str(target_w), "height": str(target_h)})
-                rows.append((mid, mtype, out, m))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "media_type", "payload", "meta"]
-            )
-
-    return df.mapInPandas(run, schema=MEDIA_SCHEMA)
-
-
-FRAME_SCHEMA = T.StructType([
-    T.StructField("media_id", T.StringType(), False),
-    T.StructField("frame_idx", T.IntegerType()),
-    T.StructField("frame", T.BinaryType()),
-])
-
-
-def sample_frames(df: DataFrame, every_n: int = 2, fake: bool = False) -> DataFrame:
-    """UDTF-shaped frame sampling: one video row → every_n-th frame as
-    its own row (media_id, frame_idx, frame). Real demuxing needs av →
-    NotImplementedError unless fake=True (payload split into
-    deterministic pseudo-frames). The one-to-many Arrow batch shape is
-    exactly what a real demuxer emits."""
-    if not fake:
-        raise NotImplementedError(
-            "real video demux needs av — not available; pass fake=True"
-        )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                n_frames = 1 + (len(b) % 7)
-                size = max(1, len(b) // n_frames)
-                frames = [b[i * size:(i + 1) * size] for i in range(n_frames)]
-                for idx in range(0, n_frames, every_n):
-                    rows.append((mid, idx, frames[idx]))
-            yield pd.DataFrame(rows, columns=["media_id", "frame_idx", "frame"])
-
-    return df.mapInPandas(run, schema=FRAME_SCHEMA)

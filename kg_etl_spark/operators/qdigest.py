@@ -21,8 +21,8 @@ corpus-scale pass; map-side partial agg), then compression over the
 state-sized histogram (≤ |distinct| ≤ 2^L rows) inside a single
 `applyInPandas` task — the corpus itself never leaves executors, and
 the digest (≤ 3k·L entries) is the only thing the driver ever sees.
-Per-partition digests + merge (the streaming/federated path) are
-exposed as pure functions over state dicts.
+Per-partition digests + merge (the federated path) are exposed as
+pure functions over state dicts.
 
 Node numbering: root 1 covers [0, 2^L); node v's children are 2v
 (low half) and 2v+1 (high half); leaves are U + value with U = 2^L.

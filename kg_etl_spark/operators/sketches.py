@@ -108,9 +108,8 @@ def hll_rho_projection(
     """Map-side half of HLL: (group, reg, rho) per input row — integer
     arithmetic + the cross-engine `bin()` trick for the leading-zero
     rank: rho = strpos(lpad(bin(rest), nbits, '0'), '1'). Registers are
-    MAX-mergeable, so this same projection feeds batch aggregation,
-    streaming update-mode aggregation, and sketch-union across shards
-    identically."""
+    MAX-mergeable, so this same projection feeds batch aggregation
+    and sketch-union across shards identically."""
     import math
 
     h = _h32(F.col(key_col), _CMS_A[0], _CMS_B[0])
@@ -170,7 +169,7 @@ def hll_distinct(
     of two, default 64 → ~13% standard error): one max-aggregate per
     (group, register) — m rows per group — then the harmonic-mean
     finalize. Composition of `hll_rho_projection` +
-    `hll_estimate_from_registers` (split so streaming/union paths reuse
+    `hll_estimate_from_registers` (split so sketch-union paths reuse
     the identical arithmetic)."""
     regs = (
         hll_rho_projection(df, group_col, key_col, m=m)

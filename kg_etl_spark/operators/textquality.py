@@ -152,20 +152,6 @@ def fingerprint(text: Column, algo: str = "md5") -> Column:
     raise ValueError(algo)
 
 
-def rolling_hash_fingerprint(text: Column, window: int = 8, mod: int = 1 << 31) -> Column:
-    """Polynomial rolling-hash document fingerprint: min rolling hash
-    over character windows of the normalized text (a winnowing-style
-    signature). Native via transform over substring windows."""
-    norm = F.regexp_replace(F.trim(F.lower(text)), r"\s+", " ")
-    n = F.length(norm)
-    idx = F.sequence(F.lit(1), F.greatest(n - window + 1, F.lit(1)))
-    piece = lambda i: F.substring(norm, 1, window) if False else F.substr(norm, i, F.lit(window))
-    h = lambda i: F.abs(F.hash(piece(i))).cast("long") % mod
-    return F.when(n >= window, F.array_min(F.transform(idx, h))).otherwise(
-        F.abs(F.hash(norm)).cast("long") % mod
-    )
-
-
 def bigram_surprisal(
     corpus: DataFrame,
     id_col: str = "doc_id",

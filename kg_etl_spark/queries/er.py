@@ -4,7 +4,7 @@ run over `part` rows with synthetic coordinates.
 
 The oracle-checked variant uses a single accept band (meters ≤ 250 AND
 token-Jaccard ≥ 0.25) so the DuckDB mirror stays tractable; the
-rapidfuzz-scored variant is Spark-only (rows-only check).
+fuzzy-scored variant (difflib ratio) is Spark-only (rows-only check).
 """
 
 from __future__ import annotations
@@ -111,7 +111,9 @@ FROM asg a JOIN rep r USING (canonical_id) JOIN members m USING (canonical_id)
 
 
 def q_er_fuzzy_links(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """rapidfuzz-scored candidate pairs (X1 pandas UDF) — Spark-only."""
+    """Fuzzy-scored candidate pairs (X1 pandas UDF, difflib
+    `SequenceMatcher.ratio`; the reference's rapidfuzz scorer waits
+    until rapidfuzz is in the environment) — Spark-only."""
     parts = _parts(spark, sf_dir)
     links = candidate_links(parts, "p_partkey", "p_name", use_fuzzy=True).filter(
         (F.col("meters") <= _ACCEPT_M) & (F.col("fuzzy_sim") >= 0.5)
@@ -124,7 +126,7 @@ def q_er_fuzzy_links(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_levenshtein_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edit-distance candidate links between supplier names, blocked by
     nation (native F.levenshtein — JVM-side, no UDF; complements the
-    Jaccard/rapidfuzz legs of the ER family). Nation blocking bounds the
+    Jaccard/fuzzy-ratio legs of the ER family). Nation blocking bounds the
     pair count the same way the geo grid does for spatial ER."""
     s = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_nationkey")
     a = s.select(
@@ -171,7 +173,7 @@ def q_er_fuzzy_identical_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     planted at the SAME coordinates with the SAME name, so the fuzzy
     kernel must score exactly 1.0 (identical strings — true for any
     sane similarity) and distance exactly 0.0 — every planted pair
-    passes the accept filter independent of the rapidfuzz kernel's
+    passes the accept filter independent of the difflib ratio's
     mid-range behavior, giving the fuzzy ER leg (blocking, pairing,
     UDF plumbing, filter) a full value-hash CORRECTNESS row."""
     parts = _parts(spark, sf_dir)

@@ -1,5 +1,4 @@
-"""Event-stream catalog (batch semantics; the Structured Streaming
-variant of the same pipeline lives in kg_etl_spark.streaming).
+"""Event-stream catalog (batch semantics over the stored event log).
 
 Time arithmetic is done in integer microseconds (Spark unix_micros ↔
 DuckDB epoch_us) — bit-exact across engines, no double-epoch rounding.
@@ -794,9 +793,8 @@ _ATTR_WINDOW_US = 3600 * 1_000_000
 
 def q_last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Last-touch attribution: each purchase credits the user's most
-    recent click within the preceding hour (batch twin of
-    streaming/joins.py `attribute_clicks` — same interval semantics,
-    declarative window instead of stream-stream state). Purchases with
+    recent click within the preceding hour (a running max of the
+    click time per user, one declarative window). Purchases with
     no qualifying click attribute to NULL and are counted unattributed."""
     ev = read_table(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts"))

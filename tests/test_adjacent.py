@@ -155,31 +155,6 @@ def test_group_free_matches_partitionless_window(spark):
     assert _rows(got) == _rows(want)
 
 
-def test_incremental_transitions_equal_full_stream(spark):
-    # split the event stream at a ts cut; batch-2 edges given batch-1
-    # state must stitch EXACTLY to the full-stream derivation
-    from kg_etl_spark.operators.adjacent import (
-        transition_edges_incremental,
-    )
-
-    ev = spark.read.parquet(SF + "/events.parquet").select(
-        "event_type", "user_id", "ts", "event_id"
-    )
-    b1 = ev.filter(F.col("ts") < F.lit("2024-01-05").cast("timestamp"))
-    b2 = ev.subtract(b1)
-    e1, s1 = transition_edges_incremental(b1)
-    e2, s2 = transition_edges_incremental(b2, s1)
-    got = sorted(tuple(r) for r in e1.unionByName(e2).collect())
-    want = sorted(tuple(r) for r in transition_edges(ev).collect())
-    assert got == want
-    # final state = per-type last event of the full stream
-    from kg_etl_spark.operators.adjacent import stream_state
-
-    assert sorted(map(tuple, s2.collect())) == sorted(
-        map(tuple, stream_state(ev).collect())
-    )
-
-
 def test_prefix_max_matches_window(spark):
     from kg_etl_spark.operators.adjacent import with_prefix_max
 

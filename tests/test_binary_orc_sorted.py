@@ -1,17 +1,10 @@
-"""Source/sink breadth: binaryFile ingest feeding the multimodal
-pipeline, ORC write/read roundtrip with pushdown, and the globally
-sorted range-partitioned parquet export."""
+"""Source breadth: binaryFile ingest feeding the multimodal pipeline."""
 
 from __future__ import annotations
 
-import glob
-import os
-
-import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from kg_etl_spark.operators.multimodal import extract_features
-from kg_etl_spark.sinks import write_orc, write_sorted_parquet
 from kg_etl_spark.sources.binaryfile import read_binary_dir
 
 
@@ -34,39 +27,3 @@ def test_binaryfile_ingest_to_features(spark, tmp_path):
         df.select("media_id", F.col("content").alias("payload")), fake=True
     )
     assert feats.count() == 2
-
-
-def test_orc_roundtrip_with_pushdown(spark, tmp_path):
-    path = str(tmp_path / "orc_out")
-    df = spark.range(0, 1000).select(
-        F.col("id"), (F.col("id") % 7).alias("grp"), (F.col("id") * 2.5).alias("val")
-    )
-    write_orc(df, path)
-    back = spark.read.orc(path)
-    assert back.count() == 1000
-    assert dict(back.dtypes) == dict(df.dtypes)
-    assert back.agg(F.sum("id")).collect()[0][0] == 499500
-    plan = back.filter(F.col("grp") == 3).select("id")._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [" in plan and "grp" in plan  # filter reaches the ORC scan
-
-
-def test_sorted_parquet_is_globally_ordered(spark, tmp_path):
-    path = str(tmp_path / "sorted_out")
-    df = spark.range(0, 5000).select(
-        (F.col("id") * 2654435761 % 4096).alias("k"), F.col("id").alias("v")
-    )
-    write_sorted_parquet(df, path, ["k"], num_files=8)
-    files = sorted(glob.glob(os.path.join(path, "part-*.parquet")))
-    assert len(files) > 1
-    # within-file sorted and cross-file ranges non-overlapping when
-    # files are ordered by their min key (global order modulo boundary ties)
-    ranges = []
-    for f in files:
-        ks = pq.read_table(f, columns=["k"]).column("k").to_pylist()
-        assert ks == sorted(ks)
-        ranges.append((ks[0], ks[-1]))
-    ranges.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2
-    # full content preserved
-    assert spark.read.parquet(path).count() == 5000

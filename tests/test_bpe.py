@@ -43,31 +43,3 @@ def test_bpe_encode_empty_merges_is_chars(spark):
     out = bpe_encode(df, merges=[]).collect()[0]
     assert out["n_pieces"] == 7
     assert out["n_words"] == 2
-
-
-def test_bpe_train_planted_merge_sequence(spark):
-    # corpus of identical words "abcd": round 1 must merge the most
-    # frequent adjacent pair; all three pairs tie at N, so the (l, r)
-    # tie-break picks ('a','b'); round 2 sees pieces [ab, c, d] ->
-    # pairs (ab,c), (c,d) tie -> 'ab' < 'c' picks (ab, c); round 3
-    # merges (abc, d); round 4 finds no pair and stops early.
-    from kg_etl_spark.operators.bpe import bpe_encode, bpe_train
-
-    df = spark.createDataFrame(
-        [(i, "abcd abcd") for i in range(5)], "doc_id long, text string"
-    )
-    merges = bpe_train(df, rounds=4)
-    assert merges == [("a", "b"), ("ab", "c"), ("abc", "d")]
-    # the learned table encodes the corpus to single pieces
-    out = bpe_encode(df, merges).collect()
-    assert all(r["n_pieces"] == r["n_words"] for r in out)
-
-
-def test_bpe_train_frequency_weighting(spark):
-    # 'xy' appears in 10 docs, 'ab' in 2 -> (x,y) must win round 1
-    from kg_etl_spark.operators.bpe import bpe_train
-
-    rows = [(i, "xy") for i in range(10)] + [(100 + i, "ab") for i in range(2)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    merges = bpe_train(df, rounds=1)
-    assert merges == [("x", "y")]

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import difflib
 import math
 
 from pyspark.sql import functions as F
@@ -11,6 +12,7 @@ from kg_etl_spark.functions.ids import canonical_id_str, prefixed_id, sha1_id
 from kg_etl_spark.functions.stats import bucket, group_zscore
 from kg_etl_spark.functions.text import (
     content_tokens,
+    fuzzy_ratio_udf,
     jaccard,
     normalize_name,
     slugify,
@@ -91,6 +93,20 @@ def test_jaccard_and_substring(spark):
         sorted_token_substring(ws_tokens(F.col("a")), ws_tokens(F.col("b"))).alias("sub"),
     ).collect()[0]
     assert abs(r["j"] - 2 / 3) < 1e-12
+
+
+def test_fuzzy_ratio_is_difflib_ratio(spark):
+    # X1 scorer: difflib SequenceMatcher.ratio in every environment; a
+    # NULL side scores 0.0 instead of raising.
+    pairs = [(1, "Old Tower Cafe", "Old Tower Café"), (2, "red widget", "widget red"), (3, "Alpha", None)]
+    df = spark.createDataFrame(pairs, "k int, a string, b string")
+    got = {
+        r["k"]: r["sim"]
+        for r in df.select("k", fuzzy_ratio_udf()(F.col("a"), F.col("b")).alias("sim")).collect()
+    }
+    want = {k: difflib.SequenceMatcher(None, a, b).ratio() if b is not None else 0.0 for k, a, b in pairs}
+    assert got == want
+    assert got[3] == 0.0 and 0.0 < got[2] < got[1] < 1.0
 
 
 def test_word_shingles(spark):
@@ -176,26 +192,6 @@ def test_geohash_known_vectors(spark):
     assert got[1] == "s00000"
     assert got[2] == "6gkzwg"
     assert got[3] == "zzzzzz"
-
-
-def test_chunk_text_udtf_matches_native_chunker(spark):
-    # the UDTF surface must reproduce the native chunker row-for-row
-    from kg_etl_spark.functions.udtfs import register_udtfs
-    from kg_etl_spark.operators.packing import chunk_documents
-    from kg_etl_spark.session import read_table
-
-    sf = "/root/testdata/sf0.001"
-    register_udtfs(spark)
-    docs = read_table(spark, sf, "documents").limit(50)
-    docs.createOrReplaceTempView("_udtf_docs")
-    via_udtf = spark.sql(
-        """SELECT d.doc_id, c.chunk_id, c.chunk_text, c.n_tokens
-           FROM _udtf_docs d, LATERAL chunk_text(d.text, 16, 8) c"""
-    )
-    native = chunk_documents(docs, window=16, stride=8)
-    u = {tuple(r) for r in via_udtf.collect()}
-    n = {tuple(r) for r in native.select("doc_id", "chunk_id", "chunk_text", "n_tokens").collect()}
-    assert u == n and len(u) > 50
 
 
 def test_monge_elkan_kernel_semantics(spark):

@@ -99,29 +99,6 @@ def test_quantize_embeddings_unit_norm_and_clamp(spark):
     assert out[3]["qvec"] == [-127, 0]
 
 
-def test_compact_parquet_and_file_manifest(spark, tmp_path):
-    from kg_etl_spark.operators.audit import file_manifest
-    from kg_etl_spark.sinks import compact_parquet
-
-    src = str(tmp_path / "fragmented")
-    out = str(tmp_path / "compacted")
-    # 64 tiny files
-    spark.range(0, 10_000).repartition(64).write.parquet(src)
-    manifest_before = file_manifest(spark, src).collect()
-    assert len(manifest_before) == 64
-    n_files = compact_parquet(spark, src, out, target_rows_per_file=5_000)
-    assert n_files == 2
-    manifest_after = file_manifest(spark, out).collect()
-    assert len(manifest_after) == 2
-    # no rows lost, sizes even (round-robin repartition)
-    assert sum(r["n_rows"] for r in manifest_after) == 10_000
-    assert max(r["n_rows"] for r in manifest_after) <= 5_100
-    # content identical
-    a = {r["id"] for r in spark.read.parquet(src).collect()}
-    b = {r["id"] for r in spark.read.parquet(out).collect()}
-    assert a == b
-
-
 def test_check_expectations_nulls_are_violations(spark):
     from kg_etl_spark.operators.audit import check_expectations
     from pyspark.sql import functions as F

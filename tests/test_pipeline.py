@@ -179,12 +179,15 @@ def _cached_rdd_ids(spark) -> set[int]:
 
 
 def test_pipeline_releases_its_caches(spark, tmp_path):
+    # Two builds into the same directory, as a long-lived session
+    # rebuilds: neither may leave a DataFrame cache behind.
     before = _cached_rdd_ids(spark)
-    res = _build(spark, str(tmp_path / "exports"))
-    assert [k for k, df in res.items() if df.is_cached] == []
-    assert not _cached_rdd_ids(spark) - before
-    for df in res.values():
-        df.collect()
+    for build in (1, 2):
+        res = _build(spark, str(tmp_path / "exports"))
+        assert [k for k, df in res.items() if df.is_cached] == []
+        assert not _cached_rdd_ids(spark) - before, f"build {build}"
+        for df in res.values():
+            df.collect()
 
     # An export that fails (its directory is a regular file) propagates,
     # and the frames persisted for the exports are released anyway.

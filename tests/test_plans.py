@@ -82,34 +82,6 @@ def test_partition_col_in_blocking_join_key(spark):
     assert {(r["a_id"], r["b_id"]) for r in bp} == {("a", "b")}
 
 
-def test_bucketed_join_has_no_shuffle(spark):
-    # bucketing is the pay-once co-location path: a fact-fact equi-join
-    # on the bucket key must plan a SortMergeJoin with NO Exchange on
-    # either side. (warehouse.dir is static config; managed tables are
-    # dropped — data included — in the finally block.)
-    from kg_etl_spark.session import read_table
-    from kg_etl_spark.sinks import write_bucketed_table
-
-    orders = read_table(spark, SF, "orders")
-    lineitem = read_table(spark, SF, "lineitem")
-    write_bucketed_table(orders.withColumnRenamed("o_orderkey", "okey"), "b_orders", ["okey"], 8)
-    write_bucketed_table(lineitem.withColumnRenamed("l_orderkey", "okey"), "b_lineitem", ["okey"], 8)
-    try:
-        j = (
-            spark.table("b_orders")
-            .join(spark.table("b_lineitem"), "okey")
-            .groupBy("o_orderpriority")
-            .count()
-        )
-        plan = physical_plan(j)
-        join_section = plan.split("HashAggregate")[0]
-        assert "Exchange" not in join_section, f"bucketed join still shuffles:\n{plan}"
-        assert j.count() > 0
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
 def test_ivf_corpus_assignment_is_map_side(spark):
     # corpus→bucket assignment must be a pure projection: the only
     # shuffles allowed in the IVF plan are the final top-k window and

@@ -1,5 +1,5 @@
 """Q-digest: compression size bound, rank-error guarantee on the
-single and MERGED paths (the federated/streaming shape the SQL oracle
+single and MERGED paths (the federated shape the SQL oracle
 can't see), and determinism."""
 
 from __future__ import annotations

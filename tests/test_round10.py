@@ -264,92 +264,6 @@ def test_bench_escalation_rule():
     assert not bench.should_escalate([], 3.0)
 
 
-def test_streaming_sprt_parity_and_sticky_decision(spark, tmp_path):
-    """Streaming SPRT: (1) totals/final LLR match the batch query over
-    the same rows; (2) the decision is sticky — once a boundary is
-    crossed, contrary later batches do not un-decide it; (3) replaying
-    a batch id merges against the prior version (no double count)."""
-    import json
-
-    from kg_etl_spark.queries import analytic
-    from kg_etl_spark.streaming.sprt_stream import (
-        sprt_state_decision,
-        sprt_stream,
-        sprt_upsert_batch,
-    )
-
-    src = tmp_path / "sprt_in"
-    src.mkdir()
-    state = str(tmp_path / "sprt_state")
-    ckpt = str(tmp_path / "sprt_ckpt")
-
-    def rows(start, n, treated_every):
-        out = []
-        for i in range(start, start + n):
-            uid = 1 if (i % treated_every) else 2
-            out.append(
-                {"event_id": i, "user_id": uid, "event_type": "purchase",
-                 "value": 1.0, "ts": f"2024-01-01T00:{(i // 60) % 60:02d}:{i % 60:02d}.000Z"}
-            )
-        return out
-
-    # batch 0: heavily treated -> crosses the upper boundary
-    (src / "b0.json").write_text(
-        "\n".join(json.dumps(r) for r in rows(0, 80, 4))
-    )
-    stream = (
-        spark.readStream.schema(
-            "event_id long, user_id long, event_type string, value double, "
-            "ts timestamp"
-        )
-        .json(str(src))
-    )
-    q = sprt_stream(stream, state, ckpt)
-    q.awaitTermination(120)
-    got = sprt_state_decision(spark, state).collect()[0]
-    assert got["decision"] == "accept_h1", got
-    first_cross = got["first_cross_batch"]
-
-    # parity with the batch query over the same rows
-    batch_df = spark.read.schema(
-        "event_id long, user_id long, event_type string, value double, "
-        "ts timestamp"
-    ).json(str(src))
-    real = analytic.read_table
-    try:
-        analytic.read_table = lambda _s, _d, _n: batch_df
-        want = analytic.q_sprt_conversion(spark, "<synthetic>").collect()[0]
-    finally:
-        analytic.read_table = real
-    assert got["n_obs"] == want["n_obs"]
-    assert got["n_treat"] == want["n_treat"]
-    assert abs(got["final_llr"] - want["final_llr"]) < 1e-9
-    assert want["decision"] == "accept_h1"
-
-    # batch 1: all-control data that would push the LLR down — the
-    # decision and crossing batch must NOT move
-    (src / "b1.json").write_text(
-        "\n".join(json.dumps(r) for r in rows(1000, 80, 1))
-    )
-    q = sprt_stream(stream, state, ckpt)
-    q.awaitTermination(120)
-    got2 = sprt_state_decision(spark, state).collect()[0]
-    assert got2["n_obs"] == got["n_obs"] + 80
-    assert got2["decision"] == "accept_h1"
-    assert got2["first_cross_batch"] == first_cross
-
-    # replay of the last batch id must merge against the version BELOW
-    # it (idempotent), not double-count on top of itself
-    last_batch = spark.read.schema(
-        "event_id long, user_id long, event_type string, value double, "
-        "ts timestamp"
-    ).json(str(src / "b1.json"))
-    latest = sprt_state_decision(spark, state).collect()[0]
-    sprt_upsert_batch(spark, last_batch, 1, state)
-    replayed = sprt_state_decision(spark, state).collect()[0]
-    assert replayed == latest
-
-
 def test_containment_prefix_branch_row_identical(spark, monkeypatch):
     """The r10 containment ssjoin must reproduce the plain inverted
     index row-for-row — including the asymmetric case it exists for

@@ -67,54 +67,6 @@ def test_jl_projection_no_shuffle(spark):
     assert "EvalPython" not in plan
 
 
-def test_hll_streaming_registers_match_batch(spark, tmp_path):
-    # The streaming max-aggregate over rho projections must finalize to
-    # EXACTLY the batch estimate — registers are mergeable state, so
-    # micro-batch boundaries cannot change the result.
-    import json as _json
-
-    from kg_etl_spark.operators.sketches import (
-        hll_distinct,
-        hll_estimate_from_registers,
-    )
-    from kg_etl_spark.streaming.sketch_stream import hll_register_stream
-    from kg_etl_spark.streaming.stateful import read_event_stream
-
-    src = tmp_path / "hll_in"
-    src.mkdir()
-    rows_a = [
-        {"event_id": i, "user_id": i % 37, "event_type": "click", "value": 1.0,
-         "ts": "2024-01-01T00:00:00.000Z"} for i in range(120)
-    ]
-    rows_b = [
-        {"event_id": 1000 + i, "user_id": 20 + (i % 55), "event_type": "click",
-         "value": 1.0, "ts": "2024-01-01T01:00:00.000Z"} for i in range(90)
-    ]
-    # two files -> two micro-batches under availableNow(one file per trigger
-    # not guaranteed, but batch-split invariance is exactly the property)
-    (src / "a.json").write_text("\n".join(_json.dumps(r) for r in rows_a))
-    (src / "b.json").write_text("\n".join(_json.dumps(r) for r in rows_b))
-
-    q = (
-        hll_register_stream(read_event_stream(spark, str(src)))
-        .writeStream.format("memory")
-        .queryName("hll_regs")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    regs = spark.sql("SELECT * FROM hll_regs")
-    got = hll_estimate_from_registers(regs, "event_type").collect()[0]
-
-    batch_df = spark.read.schema(
-        "event_id long, user_id long, event_type string, value double, ts timestamp"
-    ).json(str(src))
-    want = hll_distinct(batch_df, "event_type", "user_id").collect()[0]
-    assert got["hll_estimate"] == want["hll_estimate"]
-    assert got["n_registers_hit"] == want["n_registers_hit"]
-
-
 def test_cms_join_size_bounds(spark):
     from pyspark.sql import functions as F
 

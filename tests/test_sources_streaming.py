@@ -1,13 +1,11 @@
 """Sources (CSV repair, JSONL, SQLite, Wikivoyage XML), multimodal
-plumbing and the streaming seam."""
+plumbing, and foreachBatch runs of the batch operators (SCD2, filter
+pack, incremental dedup, MinHash index)."""
 
 from __future__ import annotations
 
-import json
 import os
 import sqlite3
-
-import pytest
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -18,11 +16,6 @@ from kg_etl_spark.sources.csvsrc import read_csv, read_csv_repaired
 from kg_etl_spark.sources.jsonl import read_jsonl, write_jsonl, write_partitioned_parquet
 from kg_etl_spark.sources.sqlite_src import load_pois, load_reviews_joined
 from kg_etl_spark.sources.xml_wikivoyage import load_wikivoyage_listings, parse_page
-from kg_etl_spark.streaming.reviews_stream import (
-    dedup_reviews,
-    read_review_stream,
-    windowed_place_counts,
-)
 
 
 def test_read_csv_id_canonicalization(spark, tmp_path):
@@ -129,230 +122,6 @@ def test_multimodal_plumbing(spark):
         pass
 
 
-def test_multimodal_resize_and_frames(spark):
-    from kg_etl_spark.operators.multimodal import resize_images, sample_frames
-
-    docs = spark.createDataFrame(
-        [(1, "hello world this is a longer payload"), (2, "tiny")],
-        "doc_id long, text string",
-    )
-    media = attach_binary_payload(docs, "text", "doc_id")
-
-    resized = {r["media_id"]: r for r in resize_images(media, 16, 16, fake=True).collect()}
-    n_out = 16 * 16 // 64
-    assert all(len(r["payload"]) == n_out for r in resized.values())
-    assert resized["1"]["meta"]["width"] == "16" and resized["1"]["meta"]["height"] == "16"
-    # deterministic
-    again = {r["media_id"]: bytes(r["payload"]) for r in resize_images(media, 16, 16, fake=True).collect()}
-    assert {k: bytes(v["payload"]) for k, v in resized.items()} == again
-
-    frames = sample_frames(media, every_n=2, fake=True).collect()
-    assert len(frames) >= 2
-    assert all(r["frame_idx"] % 2 == 0 for r in frames)
-    by_media = {}
-    for r in frames:
-        by_media.setdefault(r["media_id"], []).append(r["frame_idx"])
-    assert set(by_media) == {"1", "2"}  # one-to-many per input row
-
-    for fn in (lambda: resize_images(media, 8, 8), lambda: sample_frames(media)):
-        try:
-            fn()
-            raise AssertionError("expected NotImplementedError")
-        except NotImplementedError:
-            pass
-
-
-def test_streaming_dedup_windowed(spark, tmp_path):
-    src = tmp_path / "stream_in"
-    src.mkdir()
-    rows = [
-        {"review_id": "r1", "place_id": "p1", "rating": 4.0, "text": "a",
-         "event_time": "2024-01-01T00:01:00.000Z"},
-        {"review_id": "r1", "place_id": "p1", "rating": 4.0, "text": "a",
-         "event_time": "2024-01-01T00:01:00.000Z"},  # dup
-        {"review_id": "r1", "place_id": "p1", "rating": 4.0, "text": "a",
-         "event_time": "2024-01-01T00:02:00.000Z"},  # same review, later ts → still dup
-        {"review_id": "r2", "place_id": "p1", "rating": 2.0, "text": "b",
-         "event_time": "2024-01-01T00:03:00.000Z"},
-    ]
-    (src / "part1.json").write_text("\n".join(json.dumps(r) for r in rows))
-    stream = read_review_stream(spark, str(src))
-    out = windowed_place_counts(dedup_reviews(stream))
-    q = (
-        out.writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    got = spark.sql("SELECT * FROM win_counts").collect()
-    assert len(got) == 1
-    assert got[0]["n_reviews"] == 2 and abs(got[0]["avg_rating"] - 3.0) < 1e-9
-
-
-def test_streaming_windowed_agg_matches_batch(spark, tmp_path):
-    # batch/stream parity: the same expression tree over the same rows
-    # must produce identical aggregates in both execution modes.
-    from kg_etl_spark.streaming.stateful import read_event_stream, windowed_event_agg
-
-    src = tmp_path / "ev_in"
-    src.mkdir()
-    rows = [
-        {"event_id": 1, "user_id": 1, "event_type": "click", "value": 1.5,
-         "ts": "2024-01-01T00:10:00.000Z"},
-        {"event_id": 2, "user_id": 2, "event_type": "click", "value": 2.5,
-         "ts": "2024-01-01T00:50:00.000Z"},
-        {"event_id": 3, "user_id": 1, "event_type": "view", "value": 7.0,
-         "ts": "2024-01-01T01:10:00.000Z"},
-    ]
-    (src / "b.json").write_text("\n".join(json.dumps(r) for r in rows))
-
-    q = (
-        windowed_event_agg(read_event_stream(spark, str(src)))
-        .writeStream.format("memory")
-        .queryName("hourly_stream")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {(r["hour_us"], r["event_type"]): (r["n_events"], r["sum_value"])
-           for r in spark.sql("SELECT * FROM hourly_stream").collect()}
-
-    batch_df = spark.read.schema(
-        "event_id long, user_id long, event_type string, value double, ts timestamp"
-    ).json(str(src))
-    want = {(r["hour_us"], r["event_type"]): (r["n_events"], r["sum_value"])
-            for r in windowed_event_agg(batch_df).collect()}
-    assert got == want
-    assert got[(1704067200000000, "click")] == (2, 4.0)
-
-
-def test_stateful_sessionize_across_batches(spark, tmp_path):
-    from kg_etl_spark.streaming.stateful import read_event_stream, sessionize_stateful
-
-    src = tmp_path / "events_in"
-    src.mkdir()
-    b1 = [
-        {"event_id": 1, "user_id": 10, "event_type": "click", "value": 1.0,
-         "ts": "2024-01-01T00:00:00.000Z"},
-        {"event_id": 2, "user_id": 10, "event_type": "click", "value": 2.0,
-         "ts": "2024-01-01T00:00:10.000Z"},
-        {"event_id": 3, "user_id": 20, "event_type": "view", "value": 5.0,
-         "ts": "2024-01-01T00:00:20.000Z"},
-    ]
-    b2 = [
-        {"event_id": 4, "user_id": 10, "event_type": "buy", "value": 4.0,
-         "ts": "2024-01-01T00:01:00.000Z"},
-    ]
-    (src / "b1.json").write_text("\n".join(json.dumps(r) for r in b1))
-    (src / "b2.json").write_text("\n".join(json.dumps(r) for r in b2))
-
-    out = sessionize_stateful(read_event_stream(spark, str(src)))
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sessions")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM sessions").collect()
-    # last open-session row per user carries the accumulated state
-    final = {}
-    for r in rows:
-        if not r["closed"]:
-            final[r["user_id"]] = (r["n_events"], r["total_value"])
-    assert final[10] == (3, 7.0)
-    assert final[20] == (1, 5.0)
-
-
-def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
-    from kg_etl_spark.streaming.joins import (
-        CLICK_SCHEMA,
-        IMPRESSION_SCHEMA,
-        attribute_clicks,
-        read_click_stream,
-        read_impression_stream,
-    )
-
-    imp_dir, clk_dir = tmp_path / "imp", tmp_path / "clk"
-    imp_dir.mkdir(); clk_dir.mkdir()
-    imps = [
-        {"imp_id": 1, "user_id": 7, "campaign": "a", "imp_time": "2024-01-01T00:00:00.000Z"},
-        {"imp_id": 2, "user_id": 7, "campaign": "b", "imp_time": "2024-01-01T01:00:00.000Z"},
-        {"imp_id": 3, "user_id": 9, "campaign": "a", "imp_time": "2024-01-01T00:00:00.000Z"},
-    ]
-    clks = [
-        {"click_id": 10, "user_id": 7, "click_time": "2024-01-01T00:10:00.000Z"},  # -> imp 1
-        {"click_id": 11, "user_id": 7, "click_time": "2024-01-01T01:29:00.000Z"},  # -> imp 2
-        {"click_id": 12, "user_id": 9, "click_time": "2024-01-01T02:00:00.000Z"},  # too late
-        {"click_id": 13, "user_id": 8, "click_time": "2024-01-01T00:05:00.000Z"},  # no imp
-    ]
-    (imp_dir / "i.json").write_text("\n".join(json.dumps(r) for r in imps))
-    (clk_dir / "c.json").write_text("\n".join(json.dumps(r) for r in clks))
-
-    out = attribute_clicks(
-        read_impression_stream(spark, str(imp_dir)), read_click_stream(spark, str(clk_dir))
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("attrib")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {(r["imp_id"], r["click_id"]): r["delay_s"]
-           for r in spark.sql("SELECT * FROM attrib").collect()}
-    assert got == {(1, 10): 600, (2, 11): 1740}
-
-    batch = attribute_clicks(
-        spark.read.schema(IMPRESSION_SCHEMA).json(str(imp_dir)),
-        spark.read.schema(CLICK_SCHEMA).json(str(clk_dir)),
-    )
-    want = {(r["imp_id"], r["click_id"]): r["delay_s"] for r in batch.collect()}
-    assert got == want
-
-
-def test_streaming_checkpoint_recovery_exactly_once(spark, tmp_path):
-    # restartable query: same checkpoint across restarts → batch 1 is
-    # not reprocessed when batch 2 arrives (exactly-once file sink)
-    src = tmp_path / "ckpt_src"; src.mkdir()
-    out = str(tmp_path / "ckpt_out")
-    ckpt = str(tmp_path / "ckpt_meta")
-    stream = read_review_stream(spark, str(src))
-
-    def run_once():
-        q = (
-            dedup_reviews(stream)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    (src / "b1.json").write_text("\n".join(json.dumps(r) for r in [
-        {"review_id": "r1", "place_id": "p1", "rating": 4.0, "text": "a",
-         "event_time": "2024-01-01T00:01:00.000Z"},
-        {"review_id": "r2", "place_id": "p1", "rating": 2.0, "text": "b",
-         "event_time": "2024-01-01T00:02:00.000Z"},
-    ]))
-    run_once()
-    (src / "b2.json").write_text(json.dumps(
-        {"review_id": "r3", "place_id": "p2", "rating": 5.0, "text": "c",
-         "event_time": "2024-01-01T00:03:00.000Z"}))
-    run_once()
-
-    got = sorted(r["review_id"] for r in spark.read.parquet(out).collect())
-    assert got == ["r1", "r2", "r3"]  # each exactly once across restarts
-
-
 def test_streaming_scd2_upsert_foreachbatch(spark, tmp_path):
     # lakehouse MERGE pattern: a stream of dimension updates folds into
     # an SCD2 table inside foreachBatch, checkpoint carrying batch ids
@@ -405,178 +174,6 @@ def test_read_resilient_skips_corrupt_file(spark, tmp_path):
     with _pytest.raises(Exception):
         spark.read.parquet(path).count()  # strict read dies
     assert read_resilient(spark, path).count() == 1000  # tolerant read completes
-
-
-def test_streaming_rollup_matches_batch_recompute(spark, tmp_path):
-    """Two availableNow drains over a growing file source: the merged
-    streaming state must equal a from-scratch batch aggregate, and a
-    fresh rerun over batch 1's checkpoint must not double-count."""
-    from kg_etl_spark.operators.incremental import finalize_rollup, partial_rollup
-    from kg_etl_spark.streaming.rollup_stream import read_rollup_state, rollup_stream
-
-    src = tmp_path / "roll_src"; src.mkdir()
-    state = str(tmp_path / "roll_state")
-    ckpt = str(tmp_path / "roll_ckpt")
-
-    def rows(lo, hi):
-        return "\n".join(
-            json.dumps({"k": f"k{i % 3}", "v": float(i)}) for i in range(lo, hi)
-        )
-
-    schema = "k string, v double"
-    stream = spark.readStream.schema(schema).json(str(src))
-
-    def drain():
-        q = rollup_stream(stream, ["k"], "v", state, ckpt, keep_versions=1)
-        q.awaitTermination(120)
-
-    (src / "b1.json").write_text(rows(0, 50))
-    drain()
-    (src / "b2.json").write_text(rows(50, 80))
-    drain()
-    # no new files: draining again must not change the state
-    drain()
-
-    got = sorted(
-        tuple(r)
-        for r in finalize_rollup(read_rollup_state(spark, state)).collect()
-    )
-    want = sorted(
-        tuple(r)
-        for r in finalize_rollup(
-            partial_rollup(spark.read.schema(schema).json(str(src)), ["k"], "v")
-        ).collect()
-    )
-    assert got == want
-
-    # superseded versions are pruned: at most current + merge parent remain
-    import os
-
-    vdirs = [d for d in os.listdir(state) if d.startswith("v=")]
-    assert len(vdirs) <= 2, vdirs
-
-    # restarting with a FRESH checkpoint against the existing state_root
-    # must refuse (batch ids reset to 0 would silently fork state)
-    (src / "b3.json").write_text(rows(80, 90))
-    q = rollup_stream(stream, ["k"], "v", state, str(tmp_path / "fresh_ckpt"))
-    with pytest.raises(Exception, match="checkpoint"):
-        try:
-            q.awaitTermination(120)
-        finally:
-            q.stop()
-    # state is unchanged after the refused write
-    got2 = sorted(
-        tuple(r)
-        for r in finalize_rollup(read_rollup_state(spark, state)).collect()
-    )
-    assert got2 == got
-
-
-def test_rollup_upsert_replay_is_exactly_once(spark, tmp_path):
-    """Drive the foreachBatch body directly through crash/replay
-    sequences the harness can't easily simulate end-to-end:
-    re-running a batch id (crash between state commit and checkpoint
-    commit) must merge against the SAME parent — never double-count —
-    and a skipped-ahead state (version above the incoming batch) must
-    be refused."""
-    from kg_etl_spark.operators.incremental import finalize_rollup
-    from kg_etl_spark.streaming.rollup_stream import (
-        read_rollup_state,
-        upsert_rollup_batch,
-    )
-
-    state = str(tmp_path / "replay_state")
-    ck = "ckpt-A"
-
-    def batch(rows):
-        return spark.createDataFrame(rows, "k string, v double")
-
-    def totals():
-        return {
-            r["k"]: r["sum_v"]
-            for r in finalize_rollup(read_rollup_state(spark, state)).collect()
-        }
-
-    b0 = [("a", 1.0), ("b", 2.0)]
-    b1 = [("a", 10.0)]
-    upsert_rollup_batch(spark, batch(b0), 0, ["k"], "v", state, ck)
-    upsert_rollup_batch(spark, batch(b1), 1, ["k"], "v", state, ck)
-    want = {"a": 11.0, "b": 2.0}
-    assert totals() == want
-
-    # crash-replay of batch 1 (state committed, checkpoint didn't):
-    # re-merge against v=0, not on top of its own earlier merge
-    upsert_rollup_batch(spark, batch(b1), 1, ["k"], "v", state, ck)
-    assert totals() == want
-    # replay is idempotent arbitrarily many times
-    upsert_rollup_batch(spark, batch(b1), 1, ["k"], "v", state, ck)
-    assert totals() == want
-
-    # a different checkpoint identity is refused outright
-    with pytest.raises(ValueError, match="checkpoint"):
-        upsert_rollup_batch(spark, batch(b1), 0, ["k"], "v", state, "ckpt-B")
-    # rewinding below the committed head under the SAME checkpoint is
-    # also refused (batch ids only ever replay the last batch)
-    with pytest.raises(ValueError, match="rewind"):
-        upsert_rollup_batch(spark, batch(b0), 0, ["k"], "v", state, ck)
-    assert totals() == want
-
-
-def test_streaming_session_window_matches_batch(spark, tmp_path):
-    # Native session_window: same expression tree in streaming
-    # (availableNow, watermark-evicted state) and batch must agree, and
-    # the gap semantics must merge/split sessions correctly.
-    import json as _json
-
-    from kg_etl_spark.streaming.stateful import read_event_stream, session_window_agg
-
-    src = tmp_path / "sess_in"
-    src.mkdir()
-    rows = [
-        # user 1: two events 10 min apart (one session), then a 2h gap
-        # (second session)
-        {"event_id": 1, "user_id": 1, "event_type": "c", "value": 1.0,
-         "ts": "2024-01-01T00:00:00.000Z"},
-        {"event_id": 2, "user_id": 1, "event_type": "c", "value": 2.0,
-         "ts": "2024-01-01T00:10:00.000Z"},
-        {"event_id": 3, "user_id": 1, "event_type": "c", "value": 4.0,
-         "ts": "2024-01-01T02:10:00.000Z"},
-        # user 2: single event
-        {"event_id": 4, "user_id": 2, "event_type": "c", "value": 8.0,
-         "ts": "2024-01-01T00:05:00.000Z"},
-    ]
-    (src / "b.json").write_text("\n".join(_json.dumps(r) for r in rows))
-
-    q = (
-        session_window_agg(read_event_stream(spark, str(src)))
-        .writeStream.format("memory")
-        .queryName("sess_stream")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["user_id"], r["session_start_us"]): (r["n_events"], r["sum_value"], r["session_end_us"])
-        for r in spark.sql("SELECT * FROM sess_stream").collect()
-    }
-
-    batch_df = spark.read.schema(
-        "event_id long, user_id long, event_type string, value double, ts timestamp"
-    ).json(str(src))
-    want = {
-        (r["user_id"], r["session_start_us"]): (r["n_events"], r["sum_value"], r["session_end_us"])
-        for r in session_window_agg(batch_df).collect()
-    }
-    assert got == want
-    # user 1 splits into two sessions across the 2h gap; first merges
-    # two events and extends 30min past the last one
-    u1 = sorted(k[1] for k in got if k[0] == 1)
-    assert len(u1) == 2
-    first = got[(1, u1[0])]
-    assert first[0] == 2 and first[1] == 3.0
-    assert first[2] == u1[0] + (10 * 60 + 30 * 60) * 1_000_000
-    assert got[(2, 1704067500000000)][0] == 1
 
 
 def test_streaming_stateless_filter_pack(spark, tmp_path):
@@ -812,137 +409,3 @@ def test_streaming_incremental_minhash_foreachbatch(spark, tmp_path):
     }
     assert got == want
     assert (1, 3) in got and (1, 10) in got and (3, 10) in got
-
-
-def test_streaming_sliding_window_matches_batch(spark, tmp_path):
-    # sliding (overlapping) windows: every event lands in exactly
-    # window/slide = 2 windows; stream result == batch result on the
-    # same rows, and the per-window top type is derivable downstream.
-    from kg_etl_spark.streaming.stateful import (
-        read_event_stream,
-        sliding_window_counts,
-    )
-
-    src = tmp_path / "ev_slide"
-    src.mkdir()
-    rows = [
-        {"event_id": 1, "user_id": 1, "event_type": "click", "value": 1.0,
-         "ts": "2024-01-01T00:10:00.000Z"},
-        {"event_id": 2, "user_id": 2, "event_type": "click", "value": 2.0,
-         "ts": "2024-01-01T00:40:00.000Z"},
-        {"event_id": 3, "user_id": 3, "event_type": "view", "value": 4.0,
-         "ts": "2024-01-01T00:40:00.000Z"},
-    ]
-    (src / "b.json").write_text("\n".join(json.dumps(r) for r in rows))
-
-    q = (
-        sliding_window_counts(read_event_stream(spark, str(src)))
-        .writeStream.format("memory")
-        .queryName("sliding_stream")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["win_start_us"], r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in spark.sql("SELECT * FROM sliding_stream").collect()
-    }
-
-    batch_df = spark.read.schema(
-        "event_id long, user_id long, event_type string, value double, ts timestamp"
-    ).json(str(src))
-    want = {
-        (r["win_start_us"], r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in sliding_window_counts(batch_df).collect()
-    }
-    assert got == want
-    # each event contributes to exactly 2 overlapping windows
-    assert sum(n for n, _ in got.values()) == 2 * len(rows)
-    # the [00:00, 01:00) window sees both clicks
-    t0 = 1704067200000000
-    assert got[(t0, "click")] == (2, 3.0)
-
-
-def test_python_streaming_datasource_exactly_once(spark, tmp_path):
-    # Spark 4 Python streaming DataSource: counter offsets, pure-
-    # function rows -> every id delivered exactly once, values
-    # reproducible from the id.
-    import time
-
-    from kg_etl_spark.sources.pystream_src import (
-        SynthEventsDataSource,
-        synth_event,
-    )
-
-    spark.dataSource.register(SynthEventsDataSource)
-    q = (
-        spark.readStream.format("synthevents")
-        .option("total_rows", "100")
-        .option("batch_rows", "30")
-        .load()
-        .writeStream.format("memory")
-        .queryName("synth_events_stream")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="500 milliseconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            n = spark.sql("SELECT COUNT(*) c FROM synth_events_stream").collect()[0]["c"]
-            if n >= 100:
-                break
-            time.sleep(1)
-        rows = spark.sql("SELECT * FROM synth_events_stream").collect()
-    finally:
-        q.stop()
-    ids = sorted(r["event_id"] for r in rows)
-    assert ids == list(range(100))  # exactly once, no gaps, no dups
-    for r in rows[:10]:
-        assert (
-            r["event_id"], r["user_id"], r["event_type"], r["value"]
-        ) == synth_event(r["event_id"])
-
-
-def test_streaming_cms_matches_batch_sketch(spark, tmp_path):
-    # linearity: the streamed (multi-batch, versioned-merge) CMS equals
-    # the batch CMS over the union of rows, bit for bit — and the
-    # estimates never underestimate the true counts.
-    from kg_etl_spark.operators.sketches import cms_estimate
-    from kg_etl_spark.streaming.cms_stream import cms_state_estimate, cms_stream
-
-    src = tmp_path / "cms_in"
-    src.mkdir()
-    rows1 = [{"event_id": i, "user_id": i % 7, "event_type": "click", "value": 1.0,
-              "ts": "2024-01-01T00:00:00.000Z"} for i in range(40)]
-    rows2 = [{"event_id": 100 + i, "user_id": i % 3, "event_type": "view", "value": 1.0,
-              "ts": "2024-01-01T01:00:00.000Z"} for i in range(30)]
-    (src / "b1.json").write_text("\n".join(json.dumps(r) for r in rows1))
-    (src / "b2.json").write_text("\n".join(json.dumps(r) for r in rows2))
-
-    schema = "event_id long, user_id long, event_type string, value double, ts timestamp"
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").json(str(src))
-    )
-    state_root = str(tmp_path / "cms_state")
-    q = cms_stream(stream, "user_id", state_root, str(tmp_path / "ckpt"))
-    q.awaitTermination(180)
-
-    batch_df = spark.read.schema(schema).json(str(src))
-    keys = batch_df.select("user_id").distinct()
-    streamed = {
-        r["user_id"]: r["cms_estimate"]
-        for r in cms_state_estimate(spark, state_root, keys, "user_id").collect()
-    }
-    batch = {
-        r["user_id"]: r["cms_estimate"]
-        for r in cms_estimate(batch_df, keys, "user_id").collect()
-    }
-    assert streamed == batch
-    true_counts = {
-        r["user_id"]: r["n"]
-        for r in batch_df.groupBy("user_id").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    for k, est in streamed.items():
-        assert est >= true_counts[k]  # CMS never underestimates

@@ -93,36 +93,3 @@ def test_rollup_merge_associative_commutative(spark):
         return sorted(tuple(r) for r in x.select("k", "n", "sum_v", "min_v", "max_v").collect())
     assert snap(merged_a) == snap(whole)
     assert snap(merged_b) == snap(whole)
-
-
-def test_distinct_sketch_merge_equals_single_pass(spark):
-    """HLL states merged across overlapping slices estimate the union's
-    cardinality (no double-counting, unlike merged exact distincts) —
-    within the sketch's error band of both exact and the single-pass
-    sketch. Merged and single-pass sketches need not be bit-identical
-    (union may change the internal representation)."""
-    from kg_etl_spark.operators.incremental import (
-        finalize_distinct_sketch,
-        merge_distinct_sketches,
-        partial_distinct_sketch,
-    )
-
-    df = spark.range(0, 20_000).select(
-        (F.col("id") % 4).alias("k"), (F.col("id") % 9000).alias("u")
-    )
-    # overlapping slices — exact per-slice distincts would double-count
-    s1 = df.filter(F.col("id") < 12_000)
-    s2 = df.filter(F.col("id") >= 8_000)
-    merged = finalize_distinct_sketch(
-        merge_distinct_sketches(
-            [partial_distinct_sketch(s1, ["k"], "u"), partial_distinct_sketch(s2, ["k"], "u")],
-            ["k"],
-        )
-    )
-    single = finalize_distinct_sketch(partial_distinct_sketch(df, ["k"], "u"))
-    got = {r["k"]: r["n_distinct_est"] for r in merged.collect()}
-    want = {r["k"]: r["n_distinct_est"] for r in single.collect()}
-    exact = {r["k"]: r["n"] for r in df.groupBy("k").agg(F.countDistinct("u").alias("n")).collect()}
-    for k, est in got.items():
-        assert abs(est - want[k]) / exact[k] < 0.01  # merged ≈ single-pass
-        assert abs(est - exact[k]) / exact[k] < 0.02  # within error band

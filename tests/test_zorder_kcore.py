@@ -1,16 +1,12 @@
-"""Z-order layout export, k-core decomposition, and schema-evolution
+"""Z-order key, k-core decomposition, and schema-evolution
 reads."""
 
 from __future__ import annotations
 
-import glob
-import os
-
-import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from kg_etl_spark.operators.kcore import kcore
-from kg_etl_spark.sinks import write_zordered_parquet, zorder_key
+from kg_etl_spark.sinks import zorder_key
 
 
 def test_zorder_key_interleaves_bits(spark):
@@ -20,30 +16,6 @@ def test_zorder_key_interleaves_bits(spark):
     # x bits (101) at even positions, y bits (011) at odd:
     # z = y2 x2 y1 x1 y0 x0 = 0 1 1 0 1 1 = 0b011011
     assert df.collect()[0]["z"] == 0b011011
-
-
-def test_zordered_export_clusters_both_dims(spark, tmp_path):
-    path = str(tmp_path / "zout")
-    n = 4096
-    df = spark.range(n).select(
-        (F.col("id") % 64).alias("x"),
-        ((F.col("id") * 2654435761) % 64).alias("y"),
-        F.col("id").alias("payload"),
-    )
-    write_zordered_parquet(df, path, "x", "y", num_files=16, bits=6)
-    files = sorted(glob.glob(os.path.join(path, "part-*.parquet")))
-    assert len(files) > 4
-    # both dimensions must be clustered: every file's x-range AND
-    # y-range span well under the global 0..63 extent on average
-    spans_x, spans_y = [], []
-    for f in files:
-        t = pq.read_table(f, columns=["x", "y"])
-        xs, ys = t.column("x").to_pylist(), t.column("y").to_pylist()
-        spans_x.append(max(xs) - min(xs))
-        spans_y.append(max(ys) - min(ys))
-    assert sum(spans_x) / len(spans_x) < 48
-    assert sum(spans_y) / len(spans_y) < 48
-    assert spark.read.parquet(path).count() == n
 
 
 def test_kcore_peels_to_fixpoint(spark):

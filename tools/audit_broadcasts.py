@@ -294,8 +294,6 @@ ALLOWED: dict[str, tuple[str, str]] = {
         ("scalar", "1-row max-doc-id scalar (decile denominator)"),
     "kg_etl_spark/queries/textq.py::q_source_js_divergence::tot_s":
         ("model", "per-source totals (|sources| rows)"),
-    "kg_etl_spark/sinks.py::write_zordered_parquet::stats":
-        ("scalar", "1-row per-column min/max for z-value scaling"),
     # --- model-sized aggregates (|groups| / cells / capped frames) ----
     "kg_etl_spark/operators/adjacent.py::with_next::carry":
         ("model", "<= |range partitions| carry rows"),
@@ -356,8 +354,6 @@ ALLOWED: dict[str, tuple[str, str]] = {
         ("model", "|sources| x |langs| mix"),
     "kg_etl_spark/queries/vector.py::q_pca_power_top::means":
         ("scalar", "1-row d-dim mean vector"),
-    "kg_etl_spark/streaming/cms_stream.py::cms_state_estimate::cells":
-        ("model", "d x w CMS state cells"),
     # --- query / probe sets -------------------------------------------
     "kg_etl_spark/operators/datapipe.py::benchmark_contamination::probes":
         ("probe", "benchmark probe set (caller-bounded eval suite)"),
