@@ -37,6 +37,19 @@ def lineage_cut(df: DataFrame, eager: bool = True) -> DataFrame:
     return df.localCheckpoint(eager=eager)
 
 
+def loop_cut(df: DataFrame) -> DataFrame:
+    """Eager :func:`lineage_cut` for the state of a loop that joins it
+    with frames derived from it. A cut keeps its plan's size estimate
+    and a join's estimate is the product of its inputs', so such a loop
+    squares the estimate each round (19k bits after 7 rounds of
+    ``components_iterative``; longer loops plan for minutes). The rows
+    come back through a relation with no estimate (never broadcast)."""
+    cut = lineage_cut(df, eager=True)
+    spark = cut.sparkSession
+    jdf = spark._jsparkSession.createDataFrame(cut._jdf.javaRDD(), cut._jdf.schema())
+    return DataFrame(jdf, spark)
+
+
 # RDD name that marks a SESSION-SHARED cut (a memoized derivation
 # several queries consume, e.g. the transition-edge frame).  A
 # localCheckpoint keeps its data in persisted blocks with TRUNCATED

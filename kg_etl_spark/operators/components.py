@@ -8,7 +8,8 @@ identity, SURVEY §7.4):
 
 1. `components_iterative` — distributed min-label propagation
    (alternating large-star/small-star style), O(log n) joins. This is
-   the 100 TB path: no single group ever has to fit in one task.
+   the 100 TB path: no single group ever has to fit in one task. It
+   is also the weak-relabel step of `scc.strongly_connected_components`.
 2. union-find in one `applyInPandas` task — exact, and far faster
    while the edge list is small enough for one task.
 """
@@ -19,6 +20,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kg_etl_spark.cutpoint import loop_cut
+from kg_etl_spark.operators.util import rows_at_most
+
 
 def components_iterative(
     edges: DataFrame, src: str = "src", dst: str = "dst", max_iter: int = 50
@@ -27,8 +31,7 @@ def components_iterative(
 
     Works on string or numeric ids. Each iteration: every node adopts
     the min label in its closed neighborhood; converged when no label
-    changes. Checkpoint-free for moderate iteration counts; `localCheckpoint`
-    every few rounds to truncate lineage.
+    changes. Each round's labels are a `cutpoint.loop_cut`.
     """
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
     sym = e.union(e.select(F.col("d").alias("s"), F.col("s").alias("d"))).distinct()
@@ -65,7 +68,7 @@ def components_iterative(
                 "_changed",
             )
         )
-        stepped = stepped.lineage_cut(eager=True)
+        stepped = loop_cut(stepped)
         changed = stepped.filter(F.col("_changed")).limit(1).count()
         labels = stepped.drop("_changed")
         if changed == 0:
@@ -74,7 +77,7 @@ def components_iterative(
     return labels
 
 
-# Below this many edges the whole edge list fits one task.
+# Up to this many edges the whole edge list fits one task (also SCC's).
 SMALL_THRESHOLD = 2_000_000
 
 
@@ -90,8 +93,7 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -
     # function returns, and an unpersisted cache would silently re-run
     # the (possibly expensive) edge-producing lineage on every one.
     e = e.lineage_cut(eager=True)
-    n = e.count()
-    if n > SMALL_THRESHOLD:
+    if not rows_at_most(e, SMALL_THRESHOLD):
         return components_iterative(e)
 
     node_type = dict(e.dtypes)["src"]

@@ -20,9 +20,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kg_etl_spark.functions.text import word_shingles
-from kg_etl_spark.operators.rankdev import _memo_get
 from kg_etl_spark.operators.textquality import ws_tokens
-from kg_etl_spark.operators.util import spread
+from kg_etl_spark.operators.util import rows_at_most, spread
 
 
 # Version marker for the LSH shingle-hash family. v3 = gram hashes are
@@ -435,13 +434,13 @@ def ngram_containment_pairs_adaptive(
     :func:`ngram_jaccard_pairs_adaptive`: plain inverted index below
     :data:`PREFIX_JOIN_MIN_DOCS` docs (the prefix pipeline's fixed
     stage cost dominates small corpora), prefix × full ssjoin above
-    (the 100 TB path).  Shares the same per-frame count memo, same
+    (the 100 TB path).  Shares the same memoized size probe, same
     property-tested row-identical branch contract."""
-    if _memo_get(df, ("n_docs",), df.count) >= PREFIX_JOIN_MIN_DOCS:
-        return ngram_containment_pairs_prefix(
+    if rows_at_most(df, PREFIX_JOIN_MIN_DOCS - 1):
+        return ngram_containment_pairs(
             df, id_col, text_col, n, threshold, max_df, hash_shingles
         )
-    return ngram_containment_pairs(
+    return ngram_containment_pairs_prefix(
         df, id_col, text_col, n, threshold, max_df, hash_shingles
     )
 
@@ -898,12 +897,13 @@ def ngram_jaccard_pairs_adaptive(
     dispatch changes the PLAN, never the result.  Same pattern as the
     embedding near-dup size dispatch (operators/similarity.py).
 
-    The dispatch probe runs AT MOST ONCE per source frame: the count
-    is memoized in the weak-keyed per-frame memo (bench warmup + timed
-    runs reuse it; a new frame object probes afresh)."""
-    if _memo_get(df, ("n_docs",), df.count) >= PREFIX_JOIN_MIN_DOCS:
-        return ngram_jaccard_pairs_prefix(df, id_col, text_col, n, threshold)
-    return ngram_jaccard_pairs(df, id_col, text_col, n, threshold)
+    The dispatch probe (:func:`~kg_etl_spark.operators.util.rows_at_most`)
+    runs AT MOST ONCE per source frame and counts at most
+    :data:`PREFIX_JOIN_MIN_DOCS` rows (bench warmup + timed runs reuse
+    it; a new frame object probes afresh)."""
+    if rows_at_most(df, PREFIX_JOIN_MIN_DOCS - 1):
+        return ngram_jaccard_pairs(df, id_col, text_col, n, threshold)
+    return ngram_jaccard_pairs_prefix(df, id_col, text_col, n, threshold)
 
 
 # --- Winnowing fingerprints (Schleimer, Wilkerson, Aiken; SIGMOD'03) ---

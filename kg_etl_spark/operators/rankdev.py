@@ -75,8 +75,8 @@ from pyspark.sql import functions as F
 # its aggregates per call).  Weak-keyed: frames die, entries follow.
 # Wrong stats could only skew CELL SIZES, never results (any monotone
 # bucketing preserves the total order).  Shared with
-# operators/adjacent.py and operators/dedup.py (its size-dispatch
-# probe), which import this memo.
+# operators/adjacent.py and the size-dispatch probe
+# (operators/util.py: rows_at_most), which import this memo.
 _STATS_MEMO: "weakref.WeakKeyDictionary[DataFrame, dict]" = weakref.WeakKeyDictionary()
 
 

@@ -10,13 +10,15 @@ joins, every partition processed SIMULTANEOUSLY each round:
   repeat until no active vertices:
     1. TRIM to fixpoint: a vertex with no in- or no out-edges inside
        its partition is a singleton SCC.
-    2. WEAK RELABEL: min-id label propagation over the UNDIRECTED
-       edges inside each partition — every weakly-connected piece
-       becomes its own partition (an SCC is connected, so this never
-       splits one), and its min id doubles as the round's PIVOT.
-       This is what lets thousands of disconnected pieces (e.g.
-       disjoint cycles) settle in the SAME round instead of one per
-       round — the degenerate case of plain FW-BW.
+    2. WEAK RELABEL: weakly-connected components of the edges inside
+       the partitions (components.components_iterative, the same
+       kernel as connected_components' distributed path) — every
+       weakly-connected piece becomes its own partition, keyed by its
+       min id (an SCC is connected, so this never splits one), and
+       picks its own PIVOT. This is what lets thousands of
+       disconnected pieces (e.g. disjoint cycles) settle in the SAME
+       round instead of one per round — the degenerate case of plain
+       FW-BW.
     3. Joint flag fixpoints across ALL partitions at once:
        F = vertices reachable FROM the pivot (forward flags),
        B = vertices that REACH the pivot (backward flags),
@@ -52,31 +54,33 @@ training-data pipeline.
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kg_etl_spark.cutpoint import loop_cut
+from kg_etl_spark.operators import components
+from kg_etl_spark.operators.util import rows_at_most
 
-def _fb_flags(
-    nodes: DataFrame,
-    edges: DataFrame,
-    *,
-    max_iters: int = 60,
-    check_every: int = 2,
-) -> DataFrame:
+
+def _fb_flags(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """(node, part, f, b) JOINT fixpoint: f(v) = pivot reaches v along
     in-part edges, b(v) = v reaches pivot. Both directions advance in
     the same iteration (one state frame, two edge joins) and the
-    convergence scalar is checked every `check_every` steps — halving
-    frames and cutting driver round-trips vs two separate loops (the
-    job count, not the data volume, bounds iterative ops in local
-    mode and on busy clusters alike)."""
+    convergence scalar is checked every second step — halving frames
+    and cutting driver round-trips vs two separate loops (the job
+    count, not the data volume, bounds iterative ops in local mode and
+    on busy clusters alike). Runs to the fixpoint: flag propagation is
+    monotone, so it ends within part-diameter + 1 steps, and any fixed
+    step bound would return unconverged flags on a long cycle."""
     state = nodes.select(
         "node",
         "part",
         F.col("is_pivot").alias("f"),
         F.col("is_pivot").alias("b"),
     ).lineage_cut(eager=True)
-    for it in range(max_iters):
+    for it in itertools.count():
         f_src = state.filter(F.col("f")).select(
             F.col("node").alias("src"), F.col("part").alias("_fp")
         )
@@ -112,56 +116,12 @@ def _fb_flags(
             )
         )
         # lazy intermediates; checkpoint + convergence scalar every
-        # check_every steps (a step with _new = ∅ is a true fixpoint —
-        # flag propagation is monotone)
-        if it % check_every == check_every - 1 or it == max_iters - 1:
-            stepped = stepped.lineage_cut(eager=True)
-            changed = stepped.filter(F.col("_new")).limit(1).count()
-            if changed == 0:
-                state = stepped.select("node", "part", "f", "b")
-                break
+        # second step (a step with _new = ∅ is a true fixpoint)
+        if it % 2 == 1:
+            stepped = loop_cut(stepped)
+            if stepped.filter(F.col("_new")).limit(1).count() == 0:
+                return stepped.select("node", "part", "f", "b")
         state = stepped.select("node", "part", "f", "b")
-    return state
-
-
-def _weak_relabel(
-    active: DataFrame, edges: DataFrame, *, max_iters: int = 60, check_every: int = 2
-) -> DataFrame:
-    """(node, part) where part = min node id of the vertex's weakly-
-    connected piece WITHIN its current partition — min-label
-    propagation over symmetrized in-part edges to fixpoint. Labels are
-    node ids, so they are globally unique across old partitions."""
-    sym = edges.select("src", "dst").union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    state = active.select("node", F.col("node").alias("lbl")).lineage_cut(
-        eager=True
-    )
-    for it in range(max_iters):
-        cand = (
-            sym.join(
-                state.select(F.col("node").alias("src"), F.col("lbl").alias("_in")),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("_in").alias("_cand"))
-        )
-        stepped = state.join(cand, "node", "left").select(
-            "node",
-            F.least(F.col("lbl"), F.coalesce("_cand", F.col("lbl"))).alias("lbl"),
-            (F.col("_cand") < F.col("lbl")).alias("_chg"),
-        )
-        # checkpoint + convergence scalar only every check_every steps:
-        # intermediate steps stay lazy (bounded lineage), so the job
-        # count per fixpoint drops by the same factor
-        if it % check_every == check_every - 1 or it == max_iters - 1:
-            stepped = stepped.lineage_cut(eager=True)
-            changed = stepped.filter(F.col("_chg")).limit(1).count()
-            if changed == 0:
-                state = stepped.select("node", "lbl")
-                break
-        state = stepped.select("node", "lbl")
-    return state.select("node", F.col("lbl").alias("part"))
 
 
 def _tarjan_single_task(edges: DataFrame) -> DataFrame:
@@ -252,15 +212,14 @@ def strongly_connected_components(
     edges: DataFrame,
     *,
     max_outer: int = 30,
-    max_prop_iters: int = 60,
-    cutover_edges: int = 2_000_000,
 ) -> DataFrame:
     """(node, scc_id) for every vertex of the (src, dst) long-id edge
     list; scc_id is the minimum vertex id of the component. Self-loops
     and duplicate edges tolerated.
 
     Size-adaptive (same design as connected_components): whenever the
-    ACTIVE residual subgraph fits under `cutover_edges`, the remainder
+    ACTIVE residual subgraph has at most `components.SMALL_THRESHOLD`
+    edges (the one-task bar of connected_components), the remainder
     finishes as single-task Tarjan (linear time, one Arrow batch) —
     the distributed FW-BW rounds exist for the phase where the graph
     does NOT fit one task: trim peels the DAG fringe, the first pivots
@@ -310,15 +269,19 @@ def strongly_connected_components(
         # size-adaptive cutover: a residual subgraph under the
         # threshold finishes in one linear-time task instead of
         # O(log·diam) more fixpoint shuffles
-        if e.limit(cutover_edges + 1).count() <= cutover_edges:
+        if rows_at_most(e, components.SMALL_THRESHOLD):
             settled_parts.append(_tarjan_single_task(e).lineage_cut(eager=True))
             active = active.limit(0)
             break
-        # 2. weak relabel: part = min id of the in-part weak component;
-        # that min IS the pivot (every in-part edge keeps both
+        # 2. weak relabel: part = min id of the vertex's weak component
+        # over the in-part edges — the ordinary components kernel, since
+        # e holds no cross-part edge (every in-part edge keeps both
         # endpoints in one weak component, so e just re-keys by src's
         # new label)
-        active = _weak_relabel(active, e, max_iters=max_prop_iters)
+        comp = components.components_iterative(e)
+        active = active.join(comp, "node", "left").select(
+            "node", F.coalesce("comp", "node").alias("part")
+        )
         e = (
             e.select("src", "dst")
             .join(active.withColumnRenamed("node", "src").withColumnRenamed("part", "_np"), "src")
@@ -343,7 +306,7 @@ def strongly_connected_components(
             "node", "part", (F.col("node") == F.col("_pivot")).alias("is_pivot")
         )
         # 3. joint forward/backward reach flags, all partitions at once
-        both = _fb_flags(nodes, e, max_iters=max_prop_iters).withColumnRenamed(
+        both = _fb_flags(nodes, e).withColumnRenamed(
             "f", "_f"
         ).withColumnRenamed("b", "_b")
         hits = both.filter(F.col("_f") & F.col("_b"))
@@ -398,8 +361,7 @@ def strongly_connected_components(
             "strongly_connected_components: recursion bound "
             f"max_outer={max_outer} exhausted with vertices still "
             "unsettled; they are emitted as singleton SCCs and may be "
-            "WRONG (unsplit components). Raise max_outer or "
-            "cutover_edges.",
+            "WRONG (unsplit components). Raise max_outer.",
             RuntimeWarning,
             stacklevel=2,
         )

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from kg_etl_spark.operators.util import spread
+from kg_etl_spark.operators.util import rows_at_most, spread
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -288,12 +288,15 @@ def hyperplane_lsh_neardup_pairs(
     return verified.select("a_id", "b_id", F.round("score", 6).alias("score"))
 
 
+# Largest corpus the exact broadcast-matmul path takes.
+EXACT_MAX_ROWS = 1_000_000
+
+
 def cosine_neardup_pairs_adaptive(
     corpus: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.35,
-    exact_max_rows: int = 1_000_000,
     n_planes: int = 256,
     bands: int = 16,
     seed: int = 42,
@@ -302,7 +305,7 @@ def cosine_neardup_pairs_adaptive(
     """Size-adaptive embedding near-dup dispatch (same contract as
     `cosine_neardup_pairs`: a_id < b_id, cosine >= threshold).
 
-    Below `exact_max_rows` the exact broadcast-matmul path runs
+    Up to `EXACT_MAX_ROWS` rows the exact broadcast-matmul path runs
     (bit-identical to the all-pairs oracle). Above it — where that
     path's driver collect/broadcast (~0.5 GB per 1M×64 float64
     vectors) stops being sane — candidates come from random-hyperplane
@@ -312,15 +315,10 @@ def cosine_neardup_pairs_adaptive(
 
     Caveat carried from the LSH operator: sign-LSH blocks well in the
     near-dup regime (threshold ≳ 0.8); weak thresholds (≲ 0.5) on a
-    >exact_max_rows corpus have reduced recall — raise `bands` (more
+    >EXACT_MAX_ROWS corpus have reduced recall — raise `bands` (more
     probes) or shrink the corpus first in that case.
     """
-    # Bounded dispatch probe: LIMIT cutoff+1 before counting, so deciding
-    # which path to take costs O(exact_max_rows) scan work, not a full
-    # corpus count (at 100 TB a bare corpus.count() is a wasted full
-    # pass; the limited count short-circuits after cutoff+1 rows).
-    probe = corpus.select(id_col).limit(exact_max_rows + 1).count()
-    if probe <= exact_max_rows:
+    if rows_at_most(corpus, EXACT_MAX_ROWS):
         return cosine_neardup_pairs(corpus, id_col, vec_col, threshold)
     return hyperplane_lsh_neardup_pairs(
         corpus, id_col, vec_col, threshold,

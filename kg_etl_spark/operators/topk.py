@@ -70,18 +70,13 @@ def topk_distinct_texts(
 ) -> DataFrame:
     """Greedy: longest-first, keep a text only if fuzzy-sim < cutoff vs
     every already-kept text (reference X5). Output: (group, texts array).
+    The similarity is difflib's ``SequenceMatcher.ratio`` everywhere, so
+    the picks do not depend on which optional packages are installed.
     """
-    try:
-        from rapidfuzz import fuzz
+    import difflib
 
-        def sim(a: str, b: str) -> float:
-            return fuzz.token_set_ratio(a, b) / 100.0
-
-    except ImportError:
-        import difflib
-
-        def sim(a: str, b: str) -> float:
-            return difflib.SequenceMatcher(None, a, b).ratio()
+    def sim(a: str, b: str) -> float:
+        return difflib.SequenceMatcher(None, a, b).ratio()
 
     out_schema = f"{group_col} string, texts array<string>"
 

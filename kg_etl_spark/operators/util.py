@@ -4,6 +4,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 
+from kg_etl_spark.operators.rankdev import _memo_get
+
 
 def spread(df: DataFrame, key: Column | None = None) -> DataFrame:
     """Repartition to the session's parallelism before a CPU-heavy
@@ -19,3 +21,11 @@ def spread(df: DataFrame, key: Column | None = None) -> DataFrame:
     """
     npart = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(npart, key) if key is not None else df.repartition(npart)
+
+
+def rows_at_most(df: DataFrame, n: int) -> bool:
+    """True iff ``df`` has at most ``n`` rows: the size probe of every
+    size-adaptive operator. ``limit(n + 1)`` stops the count after n + 1
+    rows; rankdev's weak per-frame memo keeps the answer per (frame, n),
+    so repeat dispatches over the same frame run no job."""
+    return _memo_get(df, ("rows_at_most", n), lambda: df.limit(n + 1).count() <= n)

@@ -42,6 +42,7 @@ def get_spark(
     where reliability buys nothing and the write would only cost.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -51,12 +52,11 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # 16g, not "as much as the box has": at bench/test SFs an
-        # oversized heap is a pure GC liability — measured on sf0.1,
-        # a 48g heap made ngram_jaccard's first run 6.0s with 16s
-        # full-GC spikes on repeats, vs 2.7s / 1.9s steady at 12g.
-        # 10×-stress runs override via SPARK_GRAFT_DRIVER_MEM.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # half of RAM, at most 16g: a heap as large as RAM got the JVM
+        # killed; an oversized one is a GC liability (sf0.1: a 48g heap
+        # made ngram_jaccard 6.0s with 16s full-GC spikes, vs 2.7s at
+        # 12g). 10×-stress runs override via SPARK_GRAFT_DRIVER_MEM.
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{min(ram // 2, 16 << 30) >> 20}m"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # testdata parquet uses TIMESTAMP(NANOS) (pandas/pyarrow default),

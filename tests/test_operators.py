@@ -224,13 +224,14 @@ def test_hyperplane_lsh_neardup(spark):
     assert len(exact) == 18 and len(lsh) == 18
 
 
-def test_cosine_neardup_adaptive_dispatch(spark):
+def test_cosine_neardup_adaptive_dispatch(spark, monkeypatch):
     # below the cutoff: exact path (MapInPandas over the broadcast
     # matrix), identical pairs to cosine_neardup_pairs; above: the LSH
     # plan — no driver collect / MapInPandas of the corpus — and the
     # same high-sim pairs in the near-dup regime.
     import numpy as np
 
+    from kg_etl_spark.operators import similarity
     from kg_etl_spark.operators.similarity import cosine_neardup_pairs_adaptive
 
     rng = np.random.RandomState(11)
@@ -247,11 +248,13 @@ def test_cosine_neardup_adaptive_dispatch(spark):
         vid += 1
     corpus = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
-    exact_df = cosine_neardup_pairs_adaptive(corpus, threshold=0.95, exact_max_rows=1000)
+    monkeypatch.setattr(similarity, "EXACT_MAX_ROWS", 1000)
+    exact_df = cosine_neardup_pairs_adaptive(corpus, threshold=0.95)
     assert "MapInPandas" in exact_df._jdf.queryExecution().executedPlan().toString()
     exact = {(r["a_id"], r["b_id"]) for r in exact_df.collect()}
 
-    lsh_df = cosine_neardup_pairs_adaptive(corpus, threshold=0.95, exact_max_rows=10)
+    monkeypatch.setattr(similarity, "EXACT_MAX_ROWS", 10)
+    lsh_df = cosine_neardup_pairs_adaptive(corpus, threshold=0.95)
     assert "MapInPandas" not in lsh_df._jdf.queryExecution().executedPlan().toString()
     lsh = {(r["a_id"], r["b_id"]) for r in lsh_df.collect()}
 
@@ -266,6 +269,17 @@ def test_topk_distinct_texts(spark):
     rows = topk_distinct_texts(df, "grp", "text", k=2, sim_cutoff=0.9).collect()
     texts = rows[0]["texts"]
     assert len(texts) == 2 and "bad" in texts  # near-dup suppressed
+
+
+def test_topk_distinct_texts_scorer_is_difflib(spark):
+    # the same words in another order: difflib's ratio is 0.476, a
+    # token-set scorer reads 1.0 and would drop the second text
+    df = spark.createDataFrame(
+        [("p", "great food nice staff"), ("p", "nice staff great food")],
+        "grp string, text string",
+    )
+    rows = topk_distinct_texts(df, "grp", "text", k=2, sim_cutoff=0.9).collect()
+    assert sorted(rows[0]["texts"]) == ["great food nice staff", "nice staff great food"]
 
 
 def test_minhash_incremental_matches_full(spark):

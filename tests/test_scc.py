@@ -66,11 +66,37 @@ def test_scc_empty_and_selfloop_only_inputs(spark):
     assert strongly_connected_components(loops).count() == 0
 
 
-def test_scc_exhausted_recursion_warns(spark):
+def test_scc_distributed_path_matches_tarjan(spark, monkeypatch):
+    # a 70-node directed cycle needs 69 reachability steps from its
+    # pivot, plus small random SCCs hanging off it by DAG edges; with
+    # the one-task bar at 0 the FW-BW rounds must settle all of them
+    # exactly as the single-task Tarjan does
+    import random
+
+    from kg_etl_spark.operators import components
+
+    rng = random.Random(7)
+    edges = [(i, (i + 1) % 70) for i in range(70)]
+    base = 100
+    for size in (2, 3, 4, 5):
+        nodes = list(range(base, base + size))
+        rng.shuffle(nodes)
+        edges += [(nodes[i], nodes[(i + 1) % size]) for i in range(size)]
+        edges.append((rng.randrange(70), nodes[0]))
+        base += 10
+    expected = _run(spark, edges)
+    monkeypatch.setattr(components, "SMALL_THRESHOLD", 0)
+    assert _run(spark, edges) == expected
+    assert frozenset(range(70)) in expected[0]
+
+
+def test_scc_exhausted_recursion_warns(spark, monkeypatch):
     import warnings
 
     # chain of 3 cycles: one FW-BW round settles only the pivot's cycle,
     # so max_outer=1 with the cutover disabled leaves vertices unsettled
+    from kg_etl_spark.operators import components
+
     edges = []
     for b in (0, 10, 20):
         edges += [(b + 1, b + 2), (b + 2, b + 3), (b + 3, b + 1)]
@@ -78,8 +104,10 @@ def test_scc_exhausted_recursion_warns(spark):
     df = spark.createDataFrame(edges, ["src", "dst"])
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        out = strongly_connected_components(df, max_outer=1, cutover_edges=0)
-        n = out.count()
+        with monkeypatch.context() as m:
+            m.setattr(components, "SMALL_THRESHOLD", 0)
+            out = strongly_connected_components(df, max_outer=1)
+            n = out.count()
     assert n == 9  # every vertex still gets a row (escape-hatch labels)
     assert any(
         issubclass(w.category, RuntimeWarning) and "max_outer" in str(w.message)

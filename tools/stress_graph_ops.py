@@ -234,10 +234,16 @@ def stress_scc_dist(spark):
         F.col("src") != F.col("dst")
     ).distinct().localCheckpoint(eager=True)
     ne = edges.count()
+    from kg_etl_spark.operators import components
     from kg_etl_spark.operators.scc import strongly_connected_components
 
+    # lower the one-task bar so the distributed FW-BW rounds run first
     t0 = time.time()
-    out = strongly_connected_components(edges, cutover_edges=50_000)
+    saved, components.SMALL_THRESHOLD = components.SMALL_THRESHOLD, 50_000
+    try:
+        out = strongly_connected_components(edges)
+    finally:
+        components.SMALL_THRESHOLD = saved
     from pyspark.sql import functions as _F
     giant = out.groupBy("scc_id").count().agg(_F.max("count")).collect()[0][0]
     n_nodes = out.count()
