@@ -20,10 +20,14 @@ PER CALL, so a dir set mid-session takes effect immediately.
 
 from __future__ import annotations
 
+import itertools
+import warnings
 import weakref
+from typing import Callable
 
 from py4j.protocol import Py4JError
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 
 def lineage_cut(df: DataFrame, eager: bool = True) -> DataFrame:
@@ -42,12 +46,52 @@ def loop_cut(df: DataFrame) -> DataFrame:
     with frames derived from it. A cut keeps its plan's size estimate
     and a join's estimate is the product of its inputs', so such a loop
     squares the estimate each round (19k bits after 7 rounds of
-    ``components_iterative``; longer loops plan for minutes). The rows
-    come back through a relation with no estimate (never broadcast)."""
+    ``components_iterative``; longer loops plan for minutes). The cut's
+    own rows come back through a relation with no estimate (never
+    broadcast), with no conversion and no further SQL execution."""
     cut = lineage_cut(df, eager=True)
     spark = cut.sparkSession
-    jdf = spark._jsparkSession.createDataFrame(cut._jdf.javaRDD(), cut._jdf.schema())
+    rows = cut._jdf.queryExecution().analyzed().rdd()
+    jdf = spark._jsparkSession.internalCreateDataFrame(rows, cut._jdf.schema(), False)
     return DataFrame(jdf, spark)
+
+
+# Boolean column a fixpoint step marks its unfinished rows with.
+CHANGED = "_changed"
+
+
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    *,
+    max_rounds: int | None,
+    name: str,
+) -> DataFrame:
+    """Iterate ``state = step(state)`` until no row of the result has
+    :data:`CHANGED` true; return that state without the column.
+
+    ``step`` gets the previous round's state (the column included, so
+    it can act on the rows the last round flagged) and returns the next
+    one with the column set on every row that is not final yet. Each
+    round is ONE job: the flag count rides on the :func:`loop_cut`'s
+    execution as an ``observe`` metric, where a separate
+    ``filter(...).limit(1).count()`` probe cost two more. After
+    ``max_rounds`` rounds with rows still flagged, the last state comes
+    back with a ``RuntimeWarning``, never as a silent answer.
+    ``max_rounds=None`` runs to the fixpoint, for monotone steps that
+    provably end."""
+    rounds = itertools.count() if max_rounds is None else range(max_rounds)
+    for _ in rounds:
+        obs = Observation()
+        state = loop_cut(step(state).observe(obs, F.count_if(F.col(CHANGED)).alias("n")))
+        if obs.get["n"] == 0:
+            return state.drop(CHANGED)
+    warnings.warn(
+        f"{name}: did not converge within {max_rounds} rounds",
+        RuntimeWarning,
+        stacklevel=2,
+    )
+    return state.drop(CHANGED)
 
 
 # RDD name that marks a SESSION-SHARED cut (a memoized derivation

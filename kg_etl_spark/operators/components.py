@@ -7,9 +7,11 @@ of edge iteration order — fixing the reference's order-dependent root
 identity, SURVEY §7.4):
 
 1. `components_iterative` — distributed min-label propagation
-   (alternating large-star/small-star style), O(log n) joins. This is
-   the 100 TB path: no single group ever has to fit in one task. It
-   is also the weak-relabel step of `scc.strongly_connected_components`.
+   (alternating large-star/small-star style), O(log n) joins, run by
+   `cutpoint.fixpoint` (a `RuntimeWarning` after `MAX_ITER` rounds).
+   This is the 100 TB path: no single group ever has to fit in one
+   task. It is also the weak-relabel step of
+   `scc.strongly_connected_components`.
 2. union-find in one `applyInPandas` task — exact, and far faster
    while the edge list is small enough for one task.
 """
@@ -20,18 +22,20 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kg_etl_spark.cutpoint import loop_cut
+from kg_etl_spark.cutpoint import CHANGED, fixpoint
 from kg_etl_spark.operators.util import rows_at_most
 
 
-def components_iterative(
-    edges: DataFrame, src: str = "src", dst: str = "dst", max_iter: int = 50
-) -> DataFrame:
+# Label rounds before components_iterative gives up with a warning.
+MAX_ITER = 50
+
+
+def components_iterative(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """(node, component) with component = min reachable node id.
 
-    Works on string or numeric ids. Each iteration: every node adopts
-    the min label in its closed neighborhood; converged when no label
-    changes. Each round's labels are a `cutpoint.loop_cut`.
+    Works on string or numeric ids. Each round: every node adopts the
+    min label in its closed neighborhood, then jumps to its label's
+    label; a `cutpoint.fixpoint` until no label changes.
     """
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
     sym = e.union(e.select(F.col("d").alias("s"), F.col("s").alias("d"))).distinct()
@@ -43,10 +47,10 @@ def components_iterative(
         .withColumn("comp", F.col("node"))
     )
 
-    for _ in range(max_iter):
+    def step(labels: DataFrame) -> DataFrame:
         # neighborhood min: for each node, min(comp of node, comp of neighbors)
         nbr_min = (
-            sym.join(labels.withColumnRenamed("node", "d").withColumnRenamed("comp", "ncomp"), "d")
+            sym.join(labels.select(F.col("node").alias("d"), F.col("comp").alias("ncomp")), "d")
             .groupBy("s")
             .agg(F.min("ncomp").alias("nbr_comp"))
             .withColumnRenamed("s", "node")
@@ -55,24 +59,18 @@ def components_iterative(
         stepped = labels.join(nbr_min, "node", "left").select(
             "node",
             F.least(F.col("comp"), F.coalesce(F.col("nbr_comp"), F.col("comp"))).alias("comp"),
-            (F.coalesce(F.col("nbr_comp"), F.col("comp")) < F.col("comp")).alias("_changed"),
+            (F.coalesce(F.col("nbr_comp"), F.col("comp")) < F.col("comp")).alias(CHANGED),
         )
         # pointer jumping: comp ← comp(comp), collapsing label chains so
         # convergence is O(log diameter) instead of O(diameter)
         lookup = stepped.select(F.col("node").alias("_c"), F.col("comp").alias("_cc"))
-        stepped = (
-            stepped.join(lookup, stepped.comp == lookup._c, "left")
-            .select(
-                "node",
-                F.least(F.col("comp"), F.coalesce(F.col("_cc"), F.col("comp"))).alias("comp"),
-                "_changed",
-            )
+        return stepped.join(lookup, stepped.comp == lookup._c, "left").select(
+            "node",
+            F.least(F.col("comp"), F.coalesce(F.col("_cc"), F.col("comp"))).alias("comp"),
+            CHANGED,
         )
-        stepped = loop_cut(stepped)
-        changed = stepped.filter(F.col("_changed")).limit(1).count()
-        labels = stepped.drop("_changed")
-        if changed == 0:
-            break
+
+    labels = fixpoint(labels, step, max_rounds=MAX_ITER, name="components_iterative")
     sym.unpersist()
     return labels
 

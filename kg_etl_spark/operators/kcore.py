@@ -1,11 +1,11 @@
 """K-core decomposition (iterative peel): the maximal subgraph where
 every node keeps degree ≥ k.
 
-Per round: one degree aggregate + one semi-join to drop under-degree
-nodes — both keyed on the node, reusing the same partitioning. The
-driver loop stops at the fixpoint (no rows removed) or ``max_iter``;
-each round's survivor set is localCheckpointed so lineage stays flat
-(the components/BFS discipline). Engine-specific iteration ORDER never
+Per round (one `cutpoint.fixpoint` round): drop the edges the last
+round flagged, take one degree aggregate over the rest and flag every
+edge with an endpoint under degree k — node-keyed joins, reusing the
+same partitioning. It stops at the fixpoint (no edge flagged) or warns
+after ``MAX_ITER`` rounds. Engine-specific iteration ORDER never
 matters: the k-core is unique, so results are deterministic even
 though no SQL oracle can express the unbounded fixpoint (this operator
 is rows-only in the catalog sense — property-tested instead).
@@ -16,8 +16,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kg_etl_spark.cutpoint import CHANGED, fixpoint
 
-def kcore(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
+# Peel rounds before kcore gives up with a warning.
+MAX_ITER = 50
+
+
+def kcore(edges: DataFrame, k: int) -> DataFrame:
     """Nodes of the k-core of an undirected graph given as unique
     (a_id, b_id) pairs: returns (node, degree) with the node's degree
     WITHIN the core."""
@@ -25,19 +30,20 @@ def kcore(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
         edges.select(F.col("b_id").alias("u"), F.col("a_id").alias("v"))
     ).lineage_cut(eager=True)
 
-    for _ in range(max_iter):
-        deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("degree"))
-        # fixpoint probe on the DEGREE frame (node-scale, early-out
-        # limit) instead of counting the full edge list twice per
-        # round: any under-degree node means another peel is needed
-        if deg.filter(F.col("degree") < k).limit(1).count() == 0:
-            break
-        keep = deg.filter(F.col("degree") >= k).select("u")
-        sym = (
-            sym.join(keep, "u", "left_semi")
-            .join(keep.withColumnRenamed("u", "v"), "v", "left_semi")
-            .lineage_cut(eager=True)
+    def step(state: DataFrame) -> DataFrame:
+        e = state.filter(~F.col(CHANGED)).select("u", "v")
+        deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("du"))
+        # every node of the symmetric list is some edge's u, so the
+        # inner joins keep every edge
+        return (
+            e.join(deg, "u")
+            .join(deg.select(F.col("u").alias("v"), F.col("du").alias("dv")), "v")
+            .select("u", "v", ((F.col("du") < k) | (F.col("dv") < k)).alias(CHANGED))
         )
-    return sym.groupBy("u").agg(F.count(F.lit(1)).alias("degree")).select(
+
+    core = fixpoint(
+        sym.withColumn(CHANGED, F.lit(False)), step, max_rounds=MAX_ITER, name="kcore"
+    )
+    return core.groupBy("u").agg(F.count(F.lit(1)).alias("degree")).select(
         F.col("u").alias("node"), "degree"
     ).filter(F.col("degree") >= k)

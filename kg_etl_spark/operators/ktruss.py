@@ -20,28 +20,29 @@ Execution shape (100 TB): each peel round is
                   orientation caps wedge fan-out at O(sqrt(|E|)) per
                   node regardless of skew), then one edge-keyed
                   hash-agg -> per-edge support;
-  peel:           drop edges with support < k-2 and loop until the
-                  under-support probe is empty.
+  peel:           drop the edges the last round flagged, recompute
+                  the support of the rest and flag those under k-2;
+                  one `cutpoint.fixpoint` round, whose cut also counts
+                  the flagged edges, until none is flagged.
 Everything is equi-joins + hash aggregates on edge keys; nothing is
-collected to the driver. Lineage is cut per round with an eager
-localCheckpoint (the components/pagerank idiom) so the plan does not
-grow with rounds; the fixpoint probe is a limit(1).count() on the
-under-support frame (node-scale early-out, the kcore.py idiom), ONE
-extra job per round rather than two full counts.
+collected to the driver.
 
 Convergence: every round removes >= 1 edge or stops, so rounds are
 bounded by |E|; in practice peel cascades behave like the k-core's
-(tens of rounds). `max_iter` guards pathological inputs; exhausting it
-raises RuntimeWarning loudly (the scc.py settled-clean discipline)
-instead of returning a silently-unfinished truss.
+(tens of rounds). `MAX_ITER` guards pathological inputs; exhausting it
+raises a RuntimeWarning and returns the last support frame filtered to
+the threshold, whose supports may still exceed the in-truss values.
 """
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from kg_etl_spark.cutpoint import CHANGED, fixpoint
+
+# Peel rounds before ktruss gives up with a warning.
+MAX_ITER = 100
 
 
 def _triangle_support(edges: DataFrame) -> DataFrame:
@@ -122,7 +123,7 @@ def _edge_support(edges: DataFrame) -> DataFrame:
     )
 
 
-def ktruss(edges: DataFrame, k: int, max_iter: int = 100) -> DataFrame:
+def ktruss(edges: DataFrame, k: int) -> DataFrame:
     """Edges of the k-truss of an undirected graph given as unique
     (a_id, b_id) pairs (self-loops and duplicates must be absent).
     Returns (u, v, support) with u < v and the edge's triangle support
@@ -151,21 +152,12 @@ def ktruss(edges: DataFrame, k: int, max_iter: int = 100) -> DataFrame:
         # edges in >= 1 triangle), so the zero-fill left join is skipped
         # too — one support pass, no probes, no second round.
         return _triangle_support(cur)
-    for _ in range(max_iter):
-        sup = _edge_support(cur).lineage_cut(eager=True)
-        if sup.filter(F.col("support") < need).limit(1).count() == 0:
-            return sup
-        cur = (
-            sup.filter(F.col("support") >= need)
-            .select("u", "v")
-            .lineage_cut(eager=True)
-        )
-    # loud escape, never a silently-unfinished truss (scc.py idiom)
-    warnings.warn(
-        f"ktruss: peel did not converge within max_iter={max_iter}; "
-        "returning the last support frame filtered to the threshold — "
-        "edge supports may still exceed the true in-truss values",
-        RuntimeWarning,
-        stacklevel=2,
+
+    def step(sup: DataFrame) -> DataFrame:
+        cur = sup.filter(~F.col(CHANGED)).select("u", "v")
+        return _edge_support(cur).withColumn(CHANGED, F.col("support") < need)
+
+    sup = fixpoint(
+        cur.withColumn(CHANGED, F.lit(False)), step, max_rounds=MAX_ITER, name="ktruss"
     )
-    return _edge_support(cur).filter(F.col("support") >= need)
+    return sup.filter(F.col("support") >= need)

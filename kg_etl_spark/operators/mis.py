@@ -27,17 +27,25 @@ Every selected set is independent by construction; on termination
 (no active vertices) it is maximal: a vertex only deactivates by
 being selected or adjacent to a selected vertex.
 
-Scale shape: each round is one edge-keyed shuffle (min neighbor
-priority per vertex — a hash-agg over the active edge list) + a
-changed-count scalar; the active subgraph shrinks geometrically in
-expectation (Luby's analysis carries over to hash priorities acting
-pairwise-independently here). Same per-round budget as PageRank.
+Scale shape: the state is one vertex frame (node, selected, round),
+NULL `selected` marking the active vertices; each round is one
+`cutpoint.fixpoint` round: the active edge list (two semi-joins of the
+symmetric edges against the active vertices), one edge-keyed shuffle
+(min neighbor priority per vertex — a hash-agg over that list) and
+the settle join, counting the still-active vertices on the same job.
+The active subgraph shrinks geometrically in expectation (Luby's
+analysis carries over to hash priorities acting pairwise-independently
+here). Same per-round budget as PageRank.
 """
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from kg_etl_spark.cutpoint import CHANGED, fixpoint
 
 _A = 1_103_515_245
 _C = 1_013_904_223
@@ -54,71 +62,65 @@ def _prio_key(node, r: int):
     return F.struct(_prio(node, r).alias("p"), node.alias("n"))
 
 
-def luby_mis(edges: DataFrame, *, max_rounds: int = 30) -> DataFrame:
+# Luby rounds before luby_mis gives up with a warning.
+MAX_ROUNDS = 30
+
+
+def luby_mis(edges: DataFrame) -> DataFrame:
     """(node, selected, round) for every vertex of the undirected
     (src, dst) long-id edge list (each edge may be given once in
     either direction; it is symmetrized internally). `round` is the
     Luby round at which the vertex was settled (selected or
-    dominated); isolated vertices don't appear (no edges)."""
+    dominated); isolated vertices don't appear (no edges). Vertices
+    still active after `MAX_ROUNDS` rounds come with a RuntimeWarning
+    and NULL `selected` and `round`."""
     e = (
         edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
     sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct().lineage_cut(eager=True)
-    active = sym.select(F.col("src").alias("node")).distinct().lineage_cut(eager=True)
-    settled_parts = []
-    adj = sym
-    for r in range(max_rounds):
-        if active.limit(1).count() == 0:
-            break
+    state = sym.select(
+        F.col("src").alias("node"),
+        F.lit(None).cast("boolean").alias("selected"),
+        F.lit(None).cast("int").alias("round"),
+    ).distinct()
+    rounds = itertools.count()
+
+    def step(state: DataFrame) -> DataFrame:
+        r = next(rounds)
+        active = state.filter(F.col("selected").isNull()).select("node")
+        adj = sym.join(active.withColumnRenamed("node", "src"), "src", "left_semi").join(
+            active.withColumnRenamed("node", "dst"), "dst", "left_semi"
+        )
         min_nbr = (
-            adj.select(
-                "src", _prio_key(F.col("dst"), r).alias("_np")
-            )
+            adj.select("src", _prio_key(F.col("dst"), r).alias("_np"))
             .groupBy("src")
             .agg(F.min("_np").alias("_mn"))
         )
-        marked = (
+        selected = (
             active.join(min_nbr.withColumnRenamed("src", "node"), "node", "left")
-            .select(
-                "node",
-                (
-                    F.col("_mn").isNull()  # isolated in active subgraph
-                    | (_prio_key(F.col("node"), r) < F.col("_mn"))
-                ).alias("_sel"),
+            .filter(
+                F.col("_mn").isNull()  # isolated in active subgraph
+                | (_prio_key(F.col("node"), r) < F.col("_mn"))
             )
-            .lineage_cut(eager=True)
+            .select("node", F.lit(True).alias("_sel"))
         )
-        selected = marked.filter(F.col("_sel")).select("node")
         dominated = (
             adj.join(selected.withColumnRenamed("node", "src"), "src", "left_semi")
-            .select(F.col("dst").alias("node"))
+            .select(F.col("dst").alias("node"), F.lit(True).alias("_dom"))
             .distinct()
         )
-        settled_parts.append(
-            selected.select(
-                "node", F.lit(True).alias("selected"), F.lit(r).alias("round")
-            ).union(
-                dominated.join(selected, "node", "left_anti").select(
-                    "node", F.lit(False).alias("selected"), F.lit(r).alias("round")
-                )
-            ).lineage_cut(eager=True)
+        now = F.when(F.col("_sel"), True).when(F.col("_dom"), False)
+        return (
+            state.join(selected, "node", "left")
+            .join(dominated, "node", "left")
+            .select(
+                "node",
+                F.coalesce("selected", now).alias("selected"),
+                F.coalesce("round", F.when(now.isNotNull(), F.lit(r))).alias("round"),
+                F.coalesce("selected", now).isNull().alias(CHANGED),
+            )
         )
-        gone = settled_parts[-1].select("node")
-        active = active.join(gone, "node", "left_anti").lineage_cut(eager=True)
-        adj = (
-            adj.join(active.withColumnRenamed("node", "src"), "src", "left_semi")
-            .join(active.withColumnRenamed("node", "dst"), "dst", "left_semi")
-            .lineage_cut(eager=True)
-        )
-    if not settled_parts:  # empty input / self-loops only: no vertices
-        return active.select(
-            "node",
-            F.lit(True).alias("selected"),
-            F.lit(0).alias("round"),
-        ).limit(0)
-    out = settled_parts[0]
-    for p in settled_parts[1:]:
-        out = out.union(p)
-    return out
+
+    return fixpoint(state, step, max_rounds=MAX_ROUNDS, name="luby_mis")

@@ -40,11 +40,12 @@ weak relabel parallelizes across disconnected pieces, and the flag
 fixpoints cost O(diameter) edge shuffles per round.
 
 Scale shape: each flag-propagation step is ONE edge-keyed hash-agg
-(flag ∨ over in-neighbors) + a changed-count scalar — the PageRank
-per-iteration budget; partitions never materialize separately (the
-part id is just a column), so a million partitions cost the same as
-one. localCheckpoint truncates lineage per step. Settled vertices
-leave via semi-joins; late rounds touch only the residual graph.
+(flag ∨ over in-neighbors); every second step is one
+`cutpoint.fixpoint` round, whose cut also counts the newly flagged
+rows — the PageRank per-iteration budget; partitions never materialize
+separately (the part id is just a column), so a million partitions
+cost the same as one. Settled vertices leave via semi-joins; late
+rounds touch only the residual graph.
 
 Reference parity: the reference has no directed-graph analytics; this
 extends the graph family (components/pagerank/bfs/kcore) to directed
@@ -54,12 +55,12 @@ training-data pipeline.
 
 from __future__ import annotations
 
-import itertools
+import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kg_etl_spark.cutpoint import loop_cut
+from kg_etl_spark.cutpoint import CHANGED, fixpoint
 from kg_etl_spark.operators import components
 from kg_etl_spark.operators.util import rows_at_most
 
@@ -67,20 +68,15 @@ from kg_etl_spark.operators.util import rows_at_most
 def _fb_flags(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """(node, part, f, b) JOINT fixpoint: f(v) = pivot reaches v along
     in-part edges, b(v) = v reaches pivot. Both directions advance in
-    the same iteration (one state frame, two edge joins) and the
-    convergence scalar is checked every second step — halving frames
-    and cutting driver round-trips vs two separate loops (the job
-    count, not the data volume, bounds iterative ops in local mode and
-    on busy clusters alike). Runs to the fixpoint: flag propagation is
-    monotone, so it ends within part-diameter + 1 steps, and any fixed
-    step bound would return unconverged flags on a long cycle."""
-    state = nodes.select(
-        "node",
-        "part",
-        F.col("is_pivot").alias("f"),
-        F.col("is_pivot").alias("b"),
-    ).lineage_cut(eager=True)
-    for it in itertools.count():
+    the same propagation (one state frame, two edge joins), and one
+    `cutpoint.fixpoint` round is two propagations — halving frames and
+    cutting driver round-trips vs two separate loops (the job count,
+    not the data volume, bounds iterative ops in local mode and on busy
+    clusters alike). Runs to the fixpoint: flag propagation is
+    monotone, so it ends within part-diameter + 1 propagations, and any
+    fixed bound would return unconverged flags on a long cycle."""
+
+    def propagate(state: DataFrame) -> DataFrame:
         f_src = state.filter(F.col("f")).select(
             F.col("node").alias("src"), F.col("part").alias("_fp")
         )
@@ -101,7 +97,7 @@ def _fb_flags(nodes: DataFrame, edges: DataFrame) -> DataFrame:
             .distinct()
             .withColumn("_bh", F.lit(True))
         )
-        stepped = (
+        return (
             state.join(f_hits, ["node", "part"], "left")
             .join(b_hits, ["node", "part"], "left")
             .select(
@@ -109,19 +105,23 @@ def _fb_flags(nodes: DataFrame, edges: DataFrame) -> DataFrame:
                 "part",
                 (F.col("f") | F.coalesce("_fh", F.lit(False))).alias("f"),
                 (F.col("b") | F.coalesce("_bh", F.lit(False))).alias("b"),
+                # newly flagged: a round without any is a true fixpoint
                 (
                     (~F.col("f") & F.coalesce("_fh", F.lit(False)))
                     | (~F.col("b") & F.coalesce("_bh", F.lit(False)))
-                ).alias("_new"),
+                ).alias(CHANGED),
             )
         )
-        # lazy intermediates; checkpoint + convergence scalar every
-        # second step (a step with _new = ∅ is a true fixpoint)
-        if it % 2 == 1:
-            stepped = loop_cut(stepped)
-            if stepped.filter(F.col("_new")).limit(1).count() == 0:
-                return stepped.select("node", "part", "f", "b")
-        state = stepped.select("node", "part", "f", "b")
+
+    state = nodes.select(
+        "node",
+        "part",
+        F.col("is_pivot").alias("f"),
+        F.col("is_pivot").alias("b"),
+    ).lineage_cut(eager=True)
+    return fixpoint(
+        state, lambda s: propagate(propagate(s)), max_rounds=None, name="scc flags"
+    )
 
 
 def _tarjan_single_task(edges: DataFrame) -> DataFrame:
@@ -208,11 +208,12 @@ def _tarjan_single_task(edges: DataFrame) -> DataFrame:
     )
 
 
-def strongly_connected_components(
-    edges: DataFrame,
-    *,
-    max_outer: int = 30,
-) -> DataFrame:
+# FW-BW recursion levels before the leftover vertices settle as
+# singletons with a warning (a 4^30-deep bound).
+MAX_OUTER = 30
+
+
+def strongly_connected_components(edges: DataFrame) -> DataFrame:
     """(node, scc_id) for every vertex of the (src, dst) long-id edge
     list; scc_id is the minimum vertex id of the component. Self-loops
     and duplicate edges tolerated.
@@ -225,7 +226,7 @@ def strongly_connected_components(
     does NOT fit one task: trim peels the DAG fringe, the first pivots
     swallow the giant SCCs, the shrunken tail cuts over. Measured:
     75k-edge adversarial condensation 210 s via pure fixpoint rounds
-    vs ~15 s with the cutover; max_outer bounds the FW-BW recursion
+    vs ~15 s with the cutover; `MAX_OUTER` bounds the FW-BW recursion
     depth for the distributed phase."""
     e0 = (
         edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
@@ -242,7 +243,7 @@ def strongly_connected_components(
     e = e0.withColumn("part", F.lit(0).cast("long")).lineage_cut(eager=True)
     settled_parts = []
 
-    for _ in range(max_outer):
+    for _ in range(MAX_OUTER):
         # 1. trim singletons (no in- or no out-edges inside their part)
         while True:
             has_out = e.select(F.col("src").alias("node"), "part").distinct()
@@ -271,7 +272,6 @@ def strongly_connected_components(
         # O(log·diam) more fixpoint shuffles
         if rows_at_most(e, components.SMALL_THRESHOLD):
             settled_parts.append(_tarjan_single_task(e).lineage_cut(eager=True))
-            active = active.limit(0)
             break
         # 2. weak relabel: part = min id of the vertex's weak component
         # over the in-part edges — the ordinary components kernel, since
@@ -338,34 +338,29 @@ def strongly_connected_components(
             .lineage_cut(eager=True)
         )
 
-    if settled_parts:
-        out = settled_parts[0]
-        for p in settled_parts[1:]:
-            out = out.union(p)
-    else:  # empty input / self-loops-only: no vertices to settle
-        out = active.select("node", F.col("node").alias("scc_id")).limit(0)
-    # Anything still active after max_outer levels settles as its own id
-    # (a 4^30-deep recursion bound) — but NEVER silently: a non-empty
-    # leftover means those singleton labels may be WRONG (unsplit SCCs),
-    # so it is counted and warned loudly. (Round-3 lesson: a mislabeled
-    # own-id fallback passes every planted oracle while being wrong at
-    # scale — silent-wrong must become visible failure.)
-    leftover = active.select("node").join(out, "node", "left_anti").select(
-        "node", F.col("node").alias("scc_id")
-    )
-    n_left = leftover.limit(1).count()
-    if n_left > 0:
-        import warnings
-
+    else:
+        # Anything still active after MAX_OUTER levels settles as its
+        # own id — but NEVER silently: those singleton labels may be
+        # WRONG (unsplit SCCs). (Round-3 lesson: a mislabeled own-id
+        # fallback passes every planted oracle while being wrong at
+        # scale — silent-wrong must become visible failure.) Every exit
+        # by `break` leaves nothing active.
         warnings.warn(
             "strongly_connected_components: recursion bound "
-            f"max_outer={max_outer} exhausted with vertices still "
+            f"max_outer={MAX_OUTER} exhausted with vertices still "
             "unsettled; they are emitted as singleton SCCs and may be "
-            "WRONG (unsplit components). Raise max_outer.",
+            "WRONG (unsplit components). Raise scc.MAX_OUTER.",
             RuntimeWarning,
             stacklevel=2,
         )
-    return out.union(leftover)
+        settled_parts.append(active.select("node", F.col("node").alias("scc_id")))
+
+    if not settled_parts:  # empty input / self-loops-only: no vertices
+        return active.select("node", F.col("node").alias("scc_id")).limit(0)
+    out = settled_parts[0]
+    for p in settled_parts[1:]:
+        out = out.union(p)
+    return out
 
 
 def scc_sizes(scc: DataFrame) -> DataFrame:

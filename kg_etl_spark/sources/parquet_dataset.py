@@ -28,26 +28,3 @@ def read_places_dataset(spark: SparkSession, root: str) -> DataFrame:
         F.regexp_extract(F.input_file_name(), r"([^/]+)/[^/]+$", 1),
     )
 
-
-def read_resilient(
-    spark: SparkSession,
-    path: str,
-    ignore_corrupt: bool = True,
-    ignore_missing: bool = True,
-) -> DataFrame:
-    """Scan a parquet dataset tolerating the two file-level failures a
-    100 TB lake actually has: corrupt files (truncated uploads, bad
-    blocks) and files deleted between listing and read (compaction
-    racing a reader). Both are per-file skip decisions made by the
-    scan — the query completes with every healthy file's rows instead
-    of dying mid-stage hours in.
-
-    Uses the standard per-read datasource options (not session-wide
-    conf, so one tolerant reader doesn't silently relax every other
-    query's guarantees).
-    """
-    return (
-        spark.read.option("ignoreCorruptFiles", str(ignore_corrupt).lower())
-        .option("ignoreMissingFiles", str(ignore_missing).lower())
-        .parquet(path)
-    )

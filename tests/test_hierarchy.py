@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from kg_etl_spark.operators.hierarchy import ancestor_paths
 
 
@@ -25,8 +27,20 @@ def test_two_trees_and_singleton(spark):
 
 
 def test_deep_chain_resolves_in_log_rounds(spark):
-    # depth-9 chain: 0 <- 1 <- ... <- 9; max_doublings=4 suffices
+    # depth-9 chain: 0 <- 1 <- ... <- 9; 4 doublings suffice
     # (pointer distance 1,2,4,8,16 >= 9)
     rows = [(0, None)] + [(i, i - 1) for i in range(1, 10)]
     got = _run(spark, rows)
     assert got == {i: (0, i) for i in range(10)}
+
+
+def test_deep_chain_warns_at_doubling_cap(spark, monkeypatch):
+    # the depth-9 chain needs 4 doublings (distance 16 >= 9); a cap of 3
+    # used to return partial depths silently
+    from kg_etl_spark.operators import hierarchy
+
+    rows = [(0, None)] + [(i, i - 1) for i in range(1, 10)]
+    monkeypatch.setattr(hierarchy, "MAX_DOUBLINGS", 3)
+    with pytest.warns(RuntimeWarning, match="ancestor_paths: did not converge"):
+        got = _run(spark, rows)
+    assert got[9] != (0, 9)

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kg_etl_spark.operators.communities import modularity
+from kg_etl_spark.operators import ktruss as ktruss_mod
 from kg_etl_spark.operators.ktruss import ktruss
 
 
@@ -69,15 +70,16 @@ def test_ktruss_cascading_peel(spark):
     assert out3 == clique | strip
 
 
-def test_ktruss_max_iter_escape_filters_to_threshold(spark):
-    # ADVICE r4 regression: on max_iter exhaustion the warning promises a
+def test_ktruss_max_iter_escape_filters_to_threshold(spark, monkeypatch):
+    # ADVICE r4 regression: on MAX_ITER exhaustion the warning promises a
     # frame "filtered to the threshold" — the return must honor that (no
     # edge with support < k-2 may leak out of a non-converged run).
     clique = set(itertools.combinations(range(1, 6), 2))
     strip = {(i, i + 1) for i in range(6, 12)} | {(i, i + 2) for i in range(6, 11)}
     edges = clique | strip | {(1, 6)}  # needs 2+ peel rounds for k=4
+    monkeypatch.setattr(ktruss_mod, "MAX_ITER", 1)
     with pytest.warns(RuntimeWarning, match="did not converge"):
-        out = ktruss(_mk_edges(spark, edges), k=4, max_iter=1).collect()
+        out = ktruss(_mk_edges(spark, edges), k=4).collect()
     assert all(r["support"] >= 2 for r in out)
     # the converged truss is a subset of the escape frame (supports are
     # measured pre-final-peel, so extras may remain — but never below k-2)

@@ -3,6 +3,8 @@ graphs (the two defining invariants), determinism across reruns."""
 
 from __future__ import annotations
 
+import pytest
+
 from kg_etl_spark.operators.mis import luby_mis
 
 
@@ -69,3 +71,18 @@ def test_mis_priority_tie_ids_congruent_mod_p(spark):
     assert allv == {7, 7 + P, 7 + 2 * P}
     _check_invariants(edges, sel, allv)
     assert len(rows) == 3  # all settled, exactly once
+
+
+def test_mis_warns_at_round_cap(spark, monkeypatch):
+    # a path laid out in increasing round-0 priority: round 0 settles
+    # only its first two vertices, so it needs a second round; a cap of
+    # 1 used to drop the unsettled vertices silently
+    from kg_etl_spark.operators import mis
+
+    order = sorted(range(10), key=lambda v: (mis._A * v + mis._C) % mis._P)
+    edges = list(zip(order, order[1:]))
+    monkeypatch.setattr(mis, "MAX_ROUNDS", 1)
+    with pytest.warns(RuntimeWarning, match="luby_mis: did not converge"):
+        sel, allv, rows = _run(spark, edges)
+    assert allv == set(range(10))
+    assert {r["node"] for r in rows if r["selected"] is None} == set(order[2:])

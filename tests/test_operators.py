@@ -7,6 +7,7 @@ import itertools
 import math
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from kg_etl_spark.operators.blocking import blocked_pairs
@@ -100,6 +101,17 @@ def test_components_iterative_matches_unionfind(spark):
     got = {r["node"]: r["comp"] for r in components_iterative(df).collect()}
     want = _py_components(edges)
     assert got == want
+
+
+def test_components_iterative_warns_at_round_cap(spark, monkeypatch):
+    # a 200-node path needs 8 label rounds: 7 that change a label and
+    # one that finds none to change; a cap of 7 used to return silently
+    from kg_etl_spark.operators import components
+
+    df = spark.createDataFrame([(i, i + 1) for i in range(199)], "src long, dst long")
+    monkeypatch.setattr(components, "MAX_ITER", 7)
+    with pytest.warns(RuntimeWarning, match="components_iterative: did not converge"):
+        components_iterative(df).collect()
 
 
 def test_topk_per_group(spark):

@@ -94,8 +94,8 @@ def test_scc_exhausted_recursion_warns(spark, monkeypatch):
     import warnings
 
     # chain of 3 cycles: one FW-BW round settles only the pivot's cycle,
-    # so max_outer=1 with the cutover disabled leaves vertices unsettled
-    from kg_etl_spark.operators import components
+    # so MAX_OUTER=1 with the cutover disabled leaves vertices unsettled
+    from kg_etl_spark.operators import components, scc
 
     edges = []
     for b in (0, 10, 20):
@@ -106,7 +106,8 @@ def test_scc_exhausted_recursion_warns(spark, monkeypatch):
         warnings.simplefilter("always")
         with monkeypatch.context() as m:
             m.setattr(components, "SMALL_THRESHOLD", 0)
-            out = strongly_connected_components(df, max_outer=1)
+            m.setattr(scc, "MAX_OUTER", 1)
+            out = strongly_connected_components(df)
             n = out.count()
     assert n == 9  # every vertex still gets a row (escape-hatch labels)
     assert any(

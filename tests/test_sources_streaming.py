@@ -161,21 +161,6 @@ def test_streaming_scd2_upsert_foreachbatch(spark, tmp_path):
     assert rows[(3, 1, None)] == 30.0 # inserted in batch 1
 
 
-def test_read_resilient_skips_corrupt_file(spark, tmp_path):
-    from kg_etl_spark.sources.parquet_dataset import read_resilient
-
-    path = str(tmp_path / "lake")
-    spark.range(0, 1000).write.parquet(path)
-    # plant a truncated/garbage file among the healthy ones
-    with open(f"{path}/part-corrupt.parquet", "wb") as f:
-        f.write(b"PAR1 this is not a real parquet file")
-    import pytest as _pytest
-
-    with _pytest.raises(Exception):
-        spark.read.parquet(path).count()  # strict read dies
-    assert read_resilient(spark, path).count() == 1000  # tolerant read completes
-
-
 def test_streaming_stateless_filter_pack(spark, tmp_path):
     # Corpus filters are stateless projections, so they lift to
     # Structured Streaming unchanged — the same operator object runs on

@@ -3,6 +3,7 @@ reads."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from kg_etl_spark.operators.kcore import kcore
@@ -33,6 +34,19 @@ def test_kcore_peels_to_fixpoint(spark):
     assert kcore(path, k=2).count() == 0
     # core property: every member's in-core degree >= k
     assert all(d >= 3 for d in core3.values())
+
+
+def test_kcore_warns_at_peel_cap(spark, monkeypatch):
+    # triangle 1-2-3 with tail 3-4-5: the 2-core peels 4-5, then 3-4,
+    # and a third round finds nothing to peel; a cap of 2 used to
+    # return silently
+    from kg_etl_spark.operators import kcore as kcore_mod
+
+    df = spark.createDataFrame([(1, 2), (2, 3), (1, 3), (3, 4), (4, 5)], ["a_id", "b_id"])
+    assert {r["node"]: r["degree"] for r in kcore(df, k=2).collect()} == {1: 2, 2: 2, 3: 2}
+    monkeypatch.setattr(kcore_mod, "MAX_ITER", 2)
+    with pytest.warns(RuntimeWarning, match="kcore: did not converge"):
+        kcore(df, k=2).collect()
 
 
 def test_schema_evolution_merge_read(spark, tmp_path):
